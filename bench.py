@@ -16,7 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from datafusion_remote_table_spark import plans
+from datafusion_remote_table_spark import plans, staging
 from datafusion_remote_table_spark.session import get_spark
 
 # The 13 queries BASELINE.md's 14.09 s binds against. They run FIRST
@@ -181,56 +181,35 @@ HEADLINE = [
     "dedup_clip_impact_by_source",
 ]
 
-# Free each session-scoped staging right after its LAST wide-set
-# consumer (guide §5: cached data competes with execution memory;
-# unpersist when done). Multi-GB stagings (CC fixpoint, span_pos, tf
-# census, unigram chains) used to stay resident until the wide set
-# ended, and the deferred ContextCleaner work landed as one 10-190 s
-# "cleanup storm" on whichever unrelated query ran next (r10:
-# embedding_pca_top_component 38.9 s vs ~1.2 s quiet; this round's
-# before-run: ann_sq8_rerank_eval 17.4 s vs 1.6 s quiet). Releasing
-# incrementally spreads that work thin. This is measurement hygiene,
-# not timing change: every staging is still BUILT inside its first
-# consumer's timed run (cold convention untouched); release happens
-# between timed regions. The map was derived by instrumenting the
-# staging caches over a full HEADLINE pass (plans/r11/stage_map.json)
-# and lists, per query, the cache keys no later headline query reads.
-RELEASE_AFTER = {
-    "dedup_simhash": ["simh_docs_src", "simhash_sig"],
-    "line_dedup_boilerplate": ["ld_docs_src", "ld_segs"],
-    "decontaminate_ngram_overlap": ["decon_docs_src", "decon_sh"],
-    "corpus_clean_pipeline": ["boiler_doc", "cc_docs_src", "cc_fps", "decon_doc"],
-    "kmeans_embeddings": ["km_emb_src"],
-    "quality_repetition_signals": ["reps_base", "reps_docs_src"],
-    "hybrid_search_rrf": ["bm25_doclen"],
-    "dedup_substring_spans": ["span_docs_src", "span_grams"],
-    "dedup_containment": ["cont_docs_src"],
-    "dedup_bloom_incremental": ["bloom_allh", "bloom_docs_src"],
-    "ann_pq_cosine": ["pq", "pq_emb_src"],
-    # shsigbands (persisted sh/sig frames) must ride with "pairs": the
-    # persisted pairs frame's cached plan embeds the sh/sig
-    # InMemoryRelations, and removing the PARENT cache entries makes the
-    # next SQL re-resolution of pairs miss the cache and replay the full
-    # band-join + verify lineage per reference (measured this round:
-    # dedup_rate_by_source 2.7 s -> 172 s isolated, 363 s in the full
-    # bench). A persisted parent is only freeable after the last reader
-    # of every persisted child built over it.
-    "dedup_cluster_size_histogram": ["pairs", "minhash_shsigbands"],
-    "corpus_clean_funnel": ["clean_decisions"],
-    "query_expansion_prf": ["prf_idx", "prf_tf"],
-    "theta_sketch_set_ops": ["hll_words"],
-    "dedup_mix_shift_report": ["members"],
-    "dedup_editdistance_verify": ["cont_bg", "cont_cand"],
-    "embedding_knn_symmetry_audit": ["nnd_emb_src", "nnd_g"],
-    "winnowing_accuracy_eval": ["wg_docs_src", "wn_docs_src", "winnow_fp", "winnow_grams"],
-    "text_keyword_rake": ["rake_pw", "rk_docs_src"],
-    "basket_triples_apriori": ["apriori_stage"],
-    "kmeans_silhouette_eval": ["km_assign"],
-    "tokenize_unigram_prune": ["unigram2"],
-    "tokenizer_roundtrip_audit": ["bpe", "bpe_docs_src", "unigram", "tf_census", "tfc_docs_src"],
-    "privacy_t_closeness_audit": ["tclose_emd"],
-    "dedup_clip_impact_by_source": ["span_perdoc", "span_pos", "spanrun_docs_src"],
-}
+# The committed read-set record: {query: [stagings it reads]} over one
+# full HEADLINE pass, as the staging registry records them
+# (plans/bench_detail.json "read_sets" of a run; regenerate it from there
+# when a query's stagings change).
+STAGE_MAP = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r11", "stage_map.json")
+
+
+def load_release_points() -> dict[str, list[str]]:
+    """{query: stagings to release right after it}: each staging of the
+    committed read-set record goes after the LAST HEADLINE query that
+    reads it (cached data competes with execution memory, so unpersist
+    when done). Multi-GB stagings used to stay resident until
+    the wide set ended, and the deferred ContextCleaner work landed as
+    one 10-190 s "cleanup storm" on whichever unrelated query ran next
+    (r10: embedding_pca_top_component 38.9 s vs ~1.2 s quiet). Releasing
+    happens between timed regions, and every staging is still BUILT
+    inside its first consumer's timed run, so the cold convention is
+    untouched. The registry keeps a released parent alive while a
+    lineage-holding child lives (staging.py)."""
+    with open(STAGE_MAP) as fh:
+        read_sets = json.load(fh)
+    last = {}
+    for q in HEADLINE:
+        for name in read_sets.get(q, ()):
+            last[name] = q
+    out: dict[str, list[str]] = {}
+    for name, q in sorted(last.items()):
+        out.setdefault(q, []).append(name)
+    return out
 
 
 def _default_driver_mem(target_gb: int = 32) -> str:
@@ -359,76 +338,6 @@ def main() -> None:
             steal_pct.setdefault(name, []).append(round(100.0 * (s1[0] - s0[0]) / dtot, 1))
         return elapsed
 
-    def _release_stagings(names: list[str]) -> None:
-        """Drop the named staging-cache entries (RELEASE_AFTER) and nudge
-        both GCs so the ContextCleaner frees their blocks now, between
-        timed regions, instead of saving the work up for one storm. The
-        System.gc is a concurrent cycle (ExplicitGCInvokesConcurrent,
-        session.py) — nothing pauses."""
-        import gc
-
-        from datafusion_remote_table_spark.plans import llm_data, relational
-
-        wanted = set(names)
-
-        def _free(val) -> None:
-            if isinstance(val, tuple):
-                for part in val:
-                    _free(part)
-            elif isinstance(val, str):
-                try:
-                    spark.catalog.uncacheTable(val)
-                except Exception:
-                    pass  # checkpoint views aren't in the cache manager
-                try:
-                    spark.catalog.dropTempView(val)
-                except Exception:
-                    pass
-            elif hasattr(val, "unpersist"):
-                try:
-                    val.unpersist(False)
-                except Exception:
-                    pass
-
-        def _keyname(key) -> str:
-            if isinstance(key, tuple):
-                return key[0] if isinstance(key[0], str) else "minhash_shsigbands"
-            return str(key)
-
-        removed = False
-        for cache in (llm_data._MINHASH_STAGE_CACHE, relational._RANK_STAGE_CACHE):
-            for key in [k for k in cache if _keyname(k) in wanted]:
-                _free(cache.pop(key))
-                removed = True
-        if removed:
-            gc.collect()
-            spark._jvm.System.gc()
-
-    def _clear_stagings() -> None:
-        """Drop all query-owned staged/persisted state (minhash shingle/
-        signature frames, exact-rank buckets, every persisted/cached plan)
-        so the next run pays the full plan. The JVM stays warm — that is
-        deliberate: codegen/shuffle warmup is environment, staging is the
-        query's own work."""
-        import gc
-
-        from datafusion_remote_table_spark.operators import dedup as op_dedup
-        from datafusion_remote_table_spark.plans import llm_data, relational
-
-        llm_data._MINHASH_STAGE_CACHE.clear()
-        relational._RANK_STAGE_CACHE.clear()
-        op_dedup.release_persisted()
-        spark.catalog.clearCache()
-        # dropping the dicts only drops the PYTHON references; the JVM
-        # frees the persisted/localCheckpointed blocks via the async
-        # ContextCleaner AFTER Python GC runs. Without forcing both GCs
-        # here the dead blocks pile up and the next runs degrade
-        # (measured this round: minhash cold repeats 4.1 -> 5.5 -> 18.5 s
-        # from accumulated garbage; with the explicit collect they stay
-        # flat at ~2 s and storage holds at 3 RDDs).
-        gc.collect()
-        spark._jvm.System.gc()
-
     # optional per-query progress marks on STDERR (the contract line on
     # stdout is untouched) — lets an external sampler (jstat/steal) align
     # its timeline with query boundaries when diagnosing in-suite noise
@@ -438,37 +347,37 @@ def main() -> None:
         if progress:
             print(f"# done {time.time():.1f} {sec:7.3f} {name}", file=sys.stderr, flush=True)
 
+    release_after = load_release_points()
     timings: dict[str, float] = {}
     comparable_runs: dict[str, list[float]] = {}
     for name in COMPARABLE_13:
         runs = []
         for _ in range(2):
-            _clear_stagings()
-            runs.append(_run(name))
+            # cold: drop all query-owned staged state so the run pays
+            # the full plan (the JVM stays warm — codegen/shuffle warmup
+            # is environment, staging is the query's own work)
+            staging.reset(spark)
+            with staging.tagged(name):
+                runs.append(_run(name))
         comparable_runs[name] = runs
         timings[name] = min(runs)
         _mark(name, timings[name])
     for name in HEADLINE:
         if name not in timings:
-            timings[name] = _run(name)
+            with staging.tagged(name):
+                timings[name] = _run(name)
             _mark(name, timings[name])
             # drop dead Python-side handles between timed queries so the
             # JVM cleaner (periodic GC, session.py) sees their weak refs
             import gc
 
             gc.collect()
-        # free stagings whose last wide-set consumer just ran (outside
-        # the timed region — see RELEASE_AFTER). Env kill-switch for
-        # A/B-ing the mechanism itself (measurement hygiene only —
-        # results are identical either way).
-        if name in RELEASE_AFTER and os.environ.get(
-            "SPARK_GRAFT_RELEASE_STAGINGS", "1"
-        ) == "1":
-            _release_stagings(RELEASE_AFTER[name])
+        # outside the timed region: free the stagings whose last
+        # wide-set reader just ran
+        staging.release(spark, sf_dir, *release_after.get(name, ()))
 
     total = round(sum(timings.values()), 3)
     load_end = os.getloadavg()[0]
-    ncpu = os.cpu_count() or 1
     # external load ≈ loadavg beyond what this bench itself generates
     # (start is measured before any Spark job of the timed region runs).
     # 0.05*ncpu (= 1.6 on 32 cpus): stricter than r8's 0.25 threshold,
@@ -496,6 +405,8 @@ def main() -> None:
                     ),
                     "loadavg_1m": {"start": round(load_start, 2), "end": round(load_end, 2)},
                     "steal_pct_per_run": steal_pct,
+                    "read_sets": {q: sorted(v) for q, v in staging.REGISTRY.reads.items()},
+                    "rebuilt_after_release": staging.REGISTRY.rebuilt_after_release,
                 },
                 fh,
                 indent=1,
@@ -511,7 +422,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "host_state": host_state,
-                "cpus": ncpu,
+                "cpus": spark.sparkContext.defaultParallelism,
                 "comparable_13": round(sum(timings[n] for n in COMPARABLE_13), 3),
                 "comparable_13_basis": "cold",
             },

@@ -513,7 +513,7 @@ def main() -> None:
     from bench import _default_driver_mem
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem())
-    from datafusion_remote_table_spark import plans
+    from datafusion_remote_table_spark import plans, staging
     from datafusion_remote_table_spark.session import get_spark
 
     spark = get_spark("bench-scale")
@@ -524,34 +524,18 @@ def main() -> None:
     for q in QUERIES:
         plans.QUERIES[q](spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
 
-    def _clear_stagings() -> None:
-        """Drop the previous scale's staged/persisted state before timing
-        the next one. Round-8 find: running 1x/16x/64x in one session
-        left every earlier scale's persisted minhash/embedding stagings
-        pinned in the storage pool, and the 64x run measured eviction +
-        recompute thrash, not the operator — dedup_minhash_lsh read
-        141 s in-session vs 24 s in a fresh session at 64x. Same recipe
-        as bench.py: clear the Python caches, unpersist, then force both
-        GCs so the JVM ContextCleaner actually frees the blocks."""
-        import gc
-
-        from datafusion_remote_table_spark.operators import dedup as op_dedup
-        from datafusion_remote_table_spark.plans import llm_data, relational
-
-        llm_data._MINHASH_STAGE_CACHE.clear()
-        relational._RANK_STAGE_CACHE.clear()
-        op_dedup.release_persisted()
-        spark.catalog.clearCache()
-        gc.collect()
-        spark._jvm.System.gc()
-
     for scale in scales:
         sf_dir = build_scaled(scale)
-        _clear_stagings()
+        # drop the previous scale's stagings first. Round-8 find: running
+        # 1x/16x/64x in one session left every earlier scale's persisted
+        # minhash/embedding stagings pinned in the storage pool, and the
+        # 64x run measured eviction + recompute thrash, not the operator
+        # (dedup_minhash_lsh 141 s in-session vs 24 s in a fresh session)
+        staging.reset(spark)
         for q in QUERIES:
             if args.cold:
                 # min-of-2 (the bench.py comparable-gate convention):
-                # the forced GC in _clear_stagings can trigger a
+                # the forced GC in staging.reset can trigger a
                 # cleanup storm (block/shuffle freeing for the previous
                 # query's dropped stagings) that lands on whichever
                 # query runs next — measured round 8 as a roving
@@ -559,7 +543,7 @@ def main() -> None:
                 # 64x. The min discards the storm-hit run.
                 runs = []
                 for _ in range(2):
-                    _clear_stagings()
+                    staging.reset(spark)
                     t0 = time.perf_counter()
                     plans.QUERIES[q](spark, sf_dir).write.format("noop").mode(
                         "overwrite"

@@ -18,32 +18,20 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..functions.text import content_fingerprint, ngram_shingles
-
-# Frames persisted by the tunable operator APIs below (minhash_lsh_pairs,
-# containment_pairs). They must stay persisted while the returned lazy
-# DataFrame is consumed (each is referenced 2-3x inside one plan), so the
-# functions cannot unpersist before returning; instead every persist is
-# tracked here and `release_persisted()` reclaims the storage pool between
-# queries (bench._clear_stagings calls it alongside the plans-layer caches).
-_PERSISTED: list = []
+from ..staging import stage
 
 
-def _track(df: DataFrame) -> DataFrame:
-    _PERSISTED.append(df)
-    return df
+def _persisted(df: DataFrame) -> DataFrame:
+    """Persist a frame the returned lazy plan references 2-3x. The
+    operator APIs cannot unpersist before the caller consumes that plan,
+    so each frame is a private staging entry, freed by
+    ``staging.clear()`` between queries."""
+    return stage(df.sparkSession, None, None, lambda: df, "persist").frame
 
 
-def release_persisted() -> int:
-    """Unpersist every frame persisted by this module's operator APIs.
-
-    Returns the number of frames released. Safe to call at any time: a
-    consumer that re-reads a released result simply recomputes."""
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-        n += 1
-    return n
+release_persisted = staging.clear  # perfbench clears the stagings through it
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -81,10 +69,10 @@ def minhash_lsh_pairs(
     verification. Returns (id_a, id_b, jaccard), plus a containment
     column (|A∩B| / min(|A|,|B|)) when `with_containment` is set."""
     rows = n_perms // bands
-    sh = _track(
+    sh = _persisted(
         df.select(
             F.col(id_col), ngram_shingles(F.col(text_col), shingle_n).alias("shingles")
-        ).persist()
+        )
     )
     sig = sh.select(id_col, "shingles", minhash_signature(F.col("shingles"), n_perms).alias("sigs"))
 
@@ -97,7 +85,7 @@ def minhash_lsh_pairs(
             *[F.element_at("sigs", F.col("b") * rows + i + 1) for i in range(rows)],
         )
     )
-    banded = _track(banded.select(F.col(id_col), key.alias("band_key")).persist())
+    banded = _persisted(banded.select(F.col(id_col), key.alias("band_key")))
 
     # skew valve: drop pathological buckets instead of exploding pairs
     sized = banded.join(
@@ -263,11 +251,11 @@ def containment_pairs(
         threshold=0.0,
         max_bucket_size=max_bucket_size,
     ).select("id_a", "id_b")
-    grams = _track(
+    grams = _persisted(
         df.select(
             F.col(id_col),
             ngram_shingles(F.coalesce(F.col(text_col), F.lit("")), gram_n).alias("s"),
-        ).persist()
+        )
     )
     gexp = grams.select(F.col(id_col), F.explode("s").alias("g"))
     rare = gexp.groupBy("g").count().filter(F.col("count") <= rare_df_max).select("g")
@@ -386,10 +374,10 @@ def prefix_filter_pairs(
     exactness on skewed corpora at the cost of the skew backstop).
     Returns (id_a, id_b, size_a, size_b, jaccard).
     """
-    sh = _track(
+    sh = _persisted(
         df.select(
             F.col(id_col), ngram_shingles(F.col(text_col), shingle_n).alias("shingles")
-        ).persist()
+        )
     )
     texp = sh.select(
         F.col(id_col), F.size("shingles").alias("n"), F.explode("shingles").alias("w")
@@ -409,12 +397,11 @@ def prefix_filter_pairs(
     # enforces the true threshold.
     num, den = math.floor(threshold * 100), 100
     plen = F.col("n") - F.floor((num * F.col("n") + den - 1) / F.lit(den)) + 1
-    pfx = _track(
+    pfx = _persisted(
         texp.join(dfreq, "w")
         .withColumn("rk", rk)
         .filter(F.col("rk") <= plen)
         .select(id_col, "w", "n")
-        .persist()
     )
     ok = pfx.groupBy("w").agg(F.count(F.lit(1)).alias("c")).filter(
         F.col("c") <= max_posting_size
@@ -485,7 +472,7 @@ def sorted_neighborhood_pairs(
     ok = keyed.groupBy("blk").agg(F.count(F.lit(1)).alias("c")).filter(
         (F.col("c") >= 2) & (F.col("c") <= max_block_size)
     ).select("blk")
-    ranked = _track(
+    ranked = _persisted(
         keyed.join(ok, "blk")
         .withColumn(
             "rk",
@@ -494,7 +481,6 @@ def sorted_neighborhood_pairs(
             ),
         )
         .select(id_col, "blk", "rk")
-        .persist()
     )
     a, b = ranked.alias("a"), ranked.alias("b")
     cand = (
@@ -509,10 +495,10 @@ def sorted_neighborhood_pairs(
             (F.col("b.rk") - F.col("a.rk")).cast("bigint").alias("rank_gap"),
         )
     )
-    sh = _track(
+    sh = _persisted(
         df.select(
             F.col(id_col), ngram_shingles(F.col(text_col), shingle_n).alias("shingles")
-        ).persist()
+        )
     )
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sha"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("shb"))

@@ -171,14 +171,14 @@ def global_rank(
     must be a unique tie-break. For exact running sums pass a DECIMAL
     or integer ``cum_sum_col`` (float sums are order-dependent).
     """
+    import uuid
+
     from ..plans.relational import _exact_rank_stage
 
-    spark = df.sparkSession
-    # private stage key: the operator API is parameterized, so cache by
-    # the physical arguments rather than a registered query name
-    prefix = f"oprank_{key_col}_{uid_col}_{int(descending)}_{cum_sum_col}_{n_buckets}"
+    # private stagings: the input is an arbitrary DataFrame, so nothing
+    # names its content for sharing
     ranked, _n, _tot = _exact_rank_stage(
-        spark, f"_op_{id(df)}", prefix, df, key_col, uid_col,
+        df.sparkSession, None, f"oprank_{uuid.uuid4().hex}", df, key_col, uid_col,
         desc=descending, sum_col=cum_sum_col, n_buckets=n_buckets,
     )
     out = ranked.withColumnRenamed("_rank", rank_col)

@@ -19,12 +19,12 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..session import load_tables, local_frame
+from ..staging import spread, stage
 from . import ORACLE, QUERIES
 
 
@@ -509,74 +509,13 @@ def _sql_minhash_oracle(E):
     return _minhash_verify(E, "bands", "sh", prelude=prelude)
 
 
-_MINHASH_STAGE_CACHE: dict = {}
-
-
-def _dataset_suffix(sf_dir: str) -> str:
-    import hashlib
-
-    return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-
-
-def _spread_view(spark: SparkSession, sf_dir: str, table: str, prefix: str) -> str:
-    """Register ``table`` under a PRIVATE per-dataset view name
-    (``{prefix}_{md5(sf_dir)[:8]}``), spread across the cluster when the
-    scan has fewer splits than cores (the single-row-group parquet at
-    these SFs arrives as ONE partition and per-row hash/signature
-    compute is CPU-bound; a 100TB scan already has thousands of splits
-    and skips the shuffle). Private names matter: re-registering the
-    SHARED table view uncaches every cached plan built on it
-    (recache-by-name — see _minhash_stage). Idempotent per
-    session+sf_dir+prefix."""
-    key = (f"{prefix}_src", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        df = load_tables(spark, sf_dir, (table,))[table]
-        n = spark.sparkContext.defaultParallelism
-        if len(df.inputFiles()) < n:
-            df = df.repartition(n)
-        view = f"{prefix}_{_dataset_suffix(sf_dir)}"
-        df.createOrReplaceTempView(view)
-        _MINHASH_STAGE_CACHE[key] = view
-    return _MINHASH_STAGE_CACHE[key]
-
-
-def _persist_view(spark: SparkSession, sf_dir: str, prefix: str, df: DataFrame) -> str:
-    """Persist ``df`` (computed once, joined many times — Spark
-    re-evaluates view/CTE references) and register it under a private
-    per-dataset view name. Returns the view name; callers cache it in
-    _MINHASH_STAGE_CACHE so the materialization happens once per
-    session+sf_dir."""
-    view = f"{prefix}_{_dataset_suffix(sf_dir)}"
-    df.persist().createOrReplaceTempView(view)
-    return view
-
-
-def _checkpoint_view(spark: SparkSession, sf_dir: str, prefix: str, df: DataFrame) -> str:
-    """_persist_view for DEEP iterative chains (the BPE merge levels):
-    plain persist relies on Spark 4.1's best-effort cache matching when
-    the plan is re-resolved through nested temp views, and for a K-level
-    chain that matching MISSES — every consumer replays the whole
-    ancestor tree, growing ~4.5x per level (measured at sf0.1: best6
-    4.2 s, COUNT(*) over the 31-row final vocabulary 18 s, and the
-    vocabulary consumers 45-50 s per query). localCheckpoint(eager=True)
-    materializes the partitions and REPLACES the logical plan with the
-    computed RDD, so each level and every downstream consumer starts
-    from rows, not lineage. Cluster note: localCheckpoint trades
-    fault-tolerance of the staging for this truncation (an executor loss
-    recomputes nothing — the stage must be re-run), the same trade
-    Spark's own iterative MLlib jobs make; these frames are
-    vocabulary-scale, far below corpus scale."""
-    view = f"{prefix}_{_dataset_suffix(sf_dir)}"
-    df.localCheckpoint(eager=True).createOrReplaceTempView(view)
-    return view
+_MINHASH_STAGE_CACHE = staging.REGISTRY  # perfbench clears the stagings through it
 
 
 def _minhash_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Minhash staging shared across the consumers (dedup_minhash_lsh /
     dedup_clusters / dedup_keep_best / corpus_clean_pipeline /
-    minhash_accuracy_eval). Returns (shingles, sigs, bands) temp-view
-    names, keyed by session+sf_dir so the driver's
-    one-session-many-queries run pays the stage once.
+    minhash_accuracy_eval). Returns the (shingles, sigs, bands) views.
 
     The shingle and signature frames are persisted (computed once,
     joined many times — Spark re-evaluates view references); the
@@ -585,38 +524,32 @@ def _minhash_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     so deriving bands from it per reference costs pennies, while round
     2's persisted bands frame was the bulk of the materialized bytes and
     its write pushed the registered dedup_minhash_lsh from 2.0 s to
-    8.5 s in the driver bench at sf0.1 (back to ~2 s with this shape).
+    8.5 s in the bench at sf0.1 (back to ~2 s with this shape)."""
 
-    The staging views are PRIVATE, per-sf_dir names built from the
-    loaded DataFrame, never from the shared ``documents`` temp view:
-    ``createOrReplaceTempView("documents")`` by any later query UNCACHES
-    every cached plan that referenced the replaced view (Spark recaches
-    by name), which silently dropped this staging and made downstream
-    consumers recompute the signature stage per CTE reference (measured
-    18 s vs 2.3 s for corpus_clean_pipeline at sf0.1 mid-bench)."""
-    key = (id(spark), os.path.abspath(sf_dir))
-    if key in _MINHASH_STAGE_CACHE:
-        return _MINHASH_STAGE_CACHE[key]
-    doc_view = _spread_view(spark, sf_dir, "documents", "mh_docs")
-    sh_view = _persist_view(
-        spark, sf_dir, "mh_sh", spark.sql(_minhash_shingles(_Spark, src=doc_view))
-    )
-    sig_view = _persist_view(spark, sf_dir, "mh_sig", spark.sql(_minhash_sigs(_Spark, sh_view)))
-    bands_view = f"mh_bands_{_dataset_suffix(sf_dir)}"
-    spark.sql(_minhash_bands(_Spark, sig_view)).createOrReplaceTempView(bands_view)
-    _MINHASH_STAGE_CACHE[key] = (sh_view, sig_view, bands_view)
-    return _MINHASH_STAGE_CACHE[key]
+    def sh():
+        return stage(
+            spark, sf_dir, "mh_sh",
+            lambda: spark.sql(_minhash_shingles(_Spark, src=spread(spark, sf_dir, "documents"))),
+            "persist",
+        )
+
+    def sig():
+        return stage(spark, sf_dir, "mh_sig", lambda: spark.sql(_minhash_sigs(_Spark, sh())), "persist")
+
+    bands = stage(spark, sf_dir, "mh_bands", lambda: spark.sql(_minhash_bands(_Spark, sig())), "view")
+    return sh(), sig(), bands
 
 
-def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _minhash_pairs(spark: SparkSession, sf_dir: str) -> staging.Staged:
     """Verified near-dup pairs (jaccard ≥ 0.8), persisted and shared by
     dedup_minhash_lsh / dedup_clusters / dedup_keep_best — the band join
     and the two verify joins run once per session+sf_dir."""
-    key = ("pairs", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
+
+    def build():
         sh, _sig, bands = _minhash_stage(spark, sf_dir)
-        _MINHASH_STAGE_CACHE[key] = spark.sql(_minhash_verify(_Spark, bands, sh)).persist()
-    return _MINHASH_STAGE_CACHE[key]
+        return spark.sql(_minhash_verify(_Spark, bands, sh))
+
+    return stage(spark, sf_dir, "mh_pairs", build, "persist")
 
 
 def _minhash_pairs_ckpt(spark: SparkSession, sf_dir: str) -> str:
@@ -628,12 +561,9 @@ def _minhash_pairs_ckpt(spark: SparkSession, sf_dir: str) -> str:
     One shared checkpoint serves dedup_method_agreement,
     winnowing_minhash_agreement and dedup_capture_recapture, so the
     pair rows are materialized once per session+sf_dir."""
-    key = ("mh_pairs_ckpt", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "mh_pairs_ckpt", _minhash_pairs(spark, sf_dir)
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "mh_pairs_ckpt", lambda: _minhash_pairs(spark, sf_dir).frame, "checkpoint"
+    )
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,7 +571,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs on every reference, and the signature stage is the expensive
     per-row compute — persist it once, join it many times. The only
     shuffles are the band-key self-join and the two verify joins."""
-    return _minhash_pairs(spark, sf_dir)
+    return _minhash_pairs(spark, sf_dir).frame
 
 
 QUERIES["dedup_minhash_lsh"] = dedup_minhash_lsh
@@ -747,13 +677,11 @@ def _simhash_sig_stage(spark: SparkSession, sf_dir: str) -> str:
     CTEs per reference; checkpoint rather than persist per the
     multi-reference temp-view rule). Shared by dedup_simhash and
     simhash_accuracy_eval."""
-    key = ("simhash_sig", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "simh_docs")
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "simh_sig", spark.sql(_sql_simhash_sig(_Spark, doc_view))
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "simh_sig",
+        lambda: spark.sql(_sql_simhash_sig(_Spark, spread(spark, sf_dir, "documents"))),
+        "checkpoint",
+    )
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1396,22 +1324,19 @@ def _sql_ann_ivf(E):
 
 
 def _ivf_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Persisted IVF index staging (emb_view, lists_view), shared by
+    """IVF index staging (emb_view, lists_view), shared by
     ann_ivf_cosine / semdedup_embedding / ann_ivfpq_cosine — the
-    build-once / probe-many layout of a real IVF index, cached per
-    session+sf_dir behind private per-dataset views (the uncache-by-name
-    trap; see _minhash_stage)."""
-    key = ("ivf", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        emb_view = _spread_view(spark, sf_dir, "embeddings", "ivf_emb")
-        lists_view = _checkpoint_view(
-            spark,
-            sf_dir,
-            "ivf_lists",
-            spark.sql(_sql_ivf_lists(_Spark).replace("embeddings", emb_view)),
-        )
-        _MINHASH_STAGE_CACHE[key] = (emb_view, lists_view)
-    return _MINHASH_STAGE_CACHE[key]
+    build-once / probe-many layout of a real IVF index."""
+
+    def emb():
+        return spread(spark, sf_dir, "embeddings")
+
+    lists_view = stage(
+        spark, sf_dir, "ivf_lists",
+        lambda: spark.sql(_sql_ivf_lists(_Spark).replace("embeddings", emb())),
+        "checkpoint",
+    )
+    return emb(), lists_view
 
 
 def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1588,24 +1513,21 @@ def _sql_dedup_clusters_duck():
 def _minhash_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) fixpoint CC labels over the verified pairs,
     persisted and shared by dedup_clusters / dedup_keep_best."""
-    key = ("members", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        from ..operators.dedup import connected_components
+    from ..operators.dedup import connected_components
 
-        cc = connected_components(_minhash_pairs(spark, sf_dir), a_col="doc_a", b_col="doc_b")
-        # localCheckpoint, not persist (round-10): the fixpoint's LOGICAL
-        # plan is the whole K-iteration join lineage, and a persist keeps
-        # it — every consumer query re-analyzes a ~2,500-operator plan
-        # (dedup_mix_shift_report's explain held 2,509 Exchange nodes /
-        # ~770 parquet scan mentions) and leans on Spark 4.1's
-        # best-effort InMemoryRelation matching per reference. The
-        # checkpoint replaces the plan with the computed rows (the
-        # standard converged-frame rule, _checkpoint_view): consumer
-        # plans collapse to an ExistingRDD scan.
-        _MINHASH_STAGE_CACHE[key] = cc.select(
-            F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-        ).localCheckpoint(eager=True)
-    return _MINHASH_STAGE_CACHE[key]
+    def build():
+        cc = connected_components(_minhash_pairs(spark, sf_dir).frame, a_col="doc_a", b_col="doc_b")
+        return cc.select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
+
+    # checkpoint, not persist (round-10): the fixpoint's LOGICAL plan is
+    # the whole K-iteration join lineage, and a persist keeps it — every
+    # consumer query re-analyzes a ~2,500-operator plan
+    # (dedup_mix_shift_report's explain held 2,509 Exchange nodes /
+    # ~770 parquet scan mentions) and leans on Spark 4.1's best-effort
+    # InMemoryRelation matching per reference. The checkpoint replaces
+    # the plan with the computed rows (the standard converged-frame
+    # rule): consumer plans collapse to an ExistingRDD scan.
+    return stage(spark, sf_dir, "members", build, "checkpoint").frame
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1879,15 +1801,12 @@ def _sql_repetition_signals(E):
 
 
 def quality_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("reps_base", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "reps_docs")
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "reps_base", spark.sql(_reps_base(_Spark, doc_view))
-        )
-    return spark.sql(
-        "WITH " + _reps_tail(_Spark, _MINHASH_STAGE_CACHE[key]).lstrip()
+    base = stage(
+        spark, sf_dir, "reps_base",
+        lambda: spark.sql(_reps_base(_Spark, spread(spark, sf_dir, "documents"))),
+        "checkpoint",
     )
+    return spark.sql("WITH " + _reps_tail(_Spark, base).lstrip())
 
 
 QUERIES["quality_repetition_signals"] = quality_repetition_signals
@@ -2086,36 +2005,36 @@ def _km_stage(spark: SparkSession, sf_dir: str) -> str:
     integer sums divided once (IEEE-identical across engines), repr()
     round-trips the doubles into literals, and sqdist is the same
     sequential fold."""
-    key = ("km_assign", id(spark), os.path.abspath(sf_dir))
-    if key in _MINHASH_STAGE_CACHE:
-        return _MINHASH_STAGE_CACHE[key]
-    emb_view = _spread_view(spark, sf_dir, "embeddings", "km_emb")
-    # persist the base vectors once: every iteration rescans them, and at
-    # 100TB the persisted frame (MEMORY_AND_DISK) replaces repeated
-    # parquet scans of the full table
-    emb_view = _persist_view(
-        spark, sf_dir, "km_vecs", spark.table(emb_view).select("vec_id", "embedding")
-    )
-    cents = [
-        (r["cent_id"], list(r["cent"]))
-        for r in spark.sql(_km_seed(_Spark, emb_view)).collect()
-    ]
-    for _it in range(1, _KM_ITERS):
+
+    def build():
+        # persist the base vectors once: every iteration rescans them, and
+        # at 100TB the persisted frame (MEMORY_AND_DISK) replaces repeated
+        # parquet scans of the full table
+        emb_view = stage(
+            spark, sf_dir, "km_vecs",
+            lambda: spark.table(spread(spark, sf_dir, "embeddings")).select("vec_id", "embedding"),
+            "persist",
+        )
         cents = [
             (r["cent_id"], list(r["cent"]))
-            for r in spark.sql(
-                f"WITH dims AS ({_km_dims(_Spark)})"
-                f" {_km_update_carried(_Spark, _km_assign_inline(emb_view, cents))}"
-            ).collect()
+            for r in spark.sql(_km_seed(_Spark, emb_view)).collect()
         ]
-    final = spark.sql(_km_assign_inline(emb_view, cents)).select("vec_id", "cent_id", "sqd")
+        for _it in range(1, _KM_ITERS):
+            cents = [
+                (r["cent_id"], list(r["cent"]))
+                for r in spark.sql(
+                    f"WITH dims AS ({_km_dims(_Spark)})"
+                    f" {_km_update_carried(_Spark, _km_assign_inline(emb_view, cents))}"
+                ).collect()
+            ]
+        return spark.sql(_km_assign_inline(emb_view, cents)).select("vec_id", "cent_id", "sqd")
+
     # checkpoint, not persist (round-10): the silhouette/purity consumers
     # reference this view 2-3x inside one SQL (fcents re-derivation +
     # the distance join) and the persisted form re-ran the assignment
     # map per reference through Spark 4.1's best-effort view-cache
     # matching. The frame is k-bounded rows — materializing it is free.
-    _MINHASH_STAGE_CACHE[key] = _checkpoint_view(spark, sf_dir, "km_assign_final", final)
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(spark, sf_dir, "km_assign_final", build, "checkpoint")
 
 
 def _km_srcs(E, asrc, prefix):
@@ -2509,13 +2428,11 @@ def _sql_line_dedup(E, segs_src=None):
 def _line_dedup_stage(spark: SparkSession, sf_dir: str) -> str:
     """Persisted segment-fingerprint frame, shared by
     line_dedup_boilerplate and corpus_clean_pipeline's boiler leg."""
-    key = ("ld_segs", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "ld_docs")
-        _MINHASH_STAGE_CACHE[key] = _persist_view(
-            spark, sf_dir, "ld_segs", spark.sql(_line_dedup_segs(_Spark, src=doc_view))
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "ld_segs",
+        lambda: spark.sql(_line_dedup_segs(_Spark, src=spread(spark, sf_dir, "documents"))),
+        "persist",
+    )
 
 
 def _boiler_doc_stage(spark: SparkSession, sf_dir: str) -> str:
@@ -2524,13 +2441,11 @@ def _boiler_doc_stage(spark: SparkSession, sf_dir: str) -> str:
     shared by the standalone query and corpus_clean_pipeline's boiler
     leg so the assembly never re-pays the census+rollup aggregation
     (~1.4 s at sf0.1 even with the segment staging warm)."""
-    key = ("boiler_doc", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        segs = _line_dedup_stage(spark, sf_dir)
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "boiler_doc", spark.sql(_sql_line_dedup(_Spark, segs_src=segs))
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "boiler_doc",
+        lambda: spark.sql(_sql_line_dedup(_Spark, segs_src=_line_dedup_stage(spark, sf_dir))),
+        "checkpoint",
+    )
 
 
 def line_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2590,13 +2505,11 @@ def _sql_decontaminate(E, sh_src=None):
 def _decon_stage(spark: SparkSession, sf_dir: str) -> str:
     """Persisted 5-gram shingle frame, shared by
     decontaminate_ngram_overlap and corpus_clean_pipeline's decon leg."""
-    key = ("decon_sh", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "decon_docs")
-        _MINHASH_STAGE_CACHE[key] = _persist_view(
-            spark, sf_dir, "decon_sh", spark.sql(_decon_shingles(_Spark, src=doc_view))
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "decon_sh",
+        lambda: spark.sql(_decon_shingles(_Spark, src=spread(spark, sf_dir, "documents"))),
+        "persist",
+    )
 
 
 def _decon_doc_stage(spark: SparkSession, sf_dir: str) -> str:
@@ -2604,13 +2517,11 @@ def _decon_doc_stage(spark: SparkSession, sf_dir: str) -> str:
     contaminated) — the OUTPUT of the decontamination rule, shared by
     the standalone query and corpus_clean_pipeline's decon leg (the
     probe join re-ran per consumer otherwise, ~1.2 s at sf0.1)."""
-    key = ("decon_doc", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        sh = _decon_stage(spark, sf_dir)
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "decon_doc", spark.sql(_sql_decontaminate(_Spark, sh_src=sh))
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "decon_doc",
+        lambda: spark.sql(_sql_decontaminate(_Spark, sh_src=_decon_stage(spark, sf_dir))),
+        "checkpoint",
+    )
 
 
 def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2878,19 +2789,18 @@ def _fps_stage(spark: SparkSession, sf_dir: str) -> str:
     """Persisted normalized-fingerprint frame (doc_id, source, fp) —
     referenced twice in the clean pipeline (keeper census + final join)
     and by the per-source dedup-rate report."""
-    key = ("cc_fps", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "cc_docs")
-        sql = (
+    # checkpoint, not persist: every consumer references fps TWICE
+    # (keeper census + back-join) and Spark 4.1's view-cache matching
+    # misses the second reference, re-tokenizing documents per query
+    # (measured ~1.0 s per consumer at sf0.1; ~0.1 s checkpointed)
+    return stage(
+        spark, sf_dir, "cc_fps",
+        lambda: spark.sql(
             f"SELECT doc_id, source, md5({_Spark.collapse_ws('lower(text)')}) AS fp"
-            f" FROM {doc_view}"
-        )
-        # checkpoint, not persist: every consumer references fps TWICE
-        # (keeper census + back-join) and Spark 4.1's view-cache matching
-        # misses the second reference, re-tokenizing documents per query
-        # (measured ~1.0 s per consumer at sf0.1; ~0.1 s checkpointed)
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(spark, sf_dir, "cc_fps", spark.sql(sql))
-    return _MINHASH_STAGE_CACHE[key]
+            f" FROM {spread(spark, sf_dir, 'documents')}"
+        ),
+        "checkpoint",
+    )
 
 
 def _clean_decisions_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2906,16 +2816,16 @@ def _clean_decisions_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the assembly plan's CTE definitions — localCheckpoint replaces the
     plan with the computed rows, which is exactly what the production
     pipeline's written decisions table is."""
-    key = ("clean_decisions", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        pairs = _minhash_pairs(spark, sf_dir)
-        nd_view = f"cc_neardup_doc_{_dataset_suffix(sf_dir)}"
-        pairs.selectExpr("doc_b AS doc_id").distinct().localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView(nd_view)
+
+    def build():
+        nd_view = stage(
+            spark, sf_dir, "cc_neardup_doc",
+            lambda: _minhash_pairs(spark, sf_dir).frame.selectExpr("doc_b AS doc_id").distinct(),
+            "checkpoint",
+        )
         dfs = load_tables(spark, sf_dir, ("documents",))
         _repartition_views(spark, dfs)
-        df = spark.sql(
+        return spark.sql(
             _sql_corpus_clean(
                 _Spark,
                 fps_src=_fps_stage(spark, sf_dir),
@@ -2924,8 +2834,8 @@ def _clean_decisions_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 neardup_src=nd_view,
             )
         )
-        _MINHASH_STAGE_CACHE[key] = df.localCheckpoint(eager=True)
-    return _MINHASH_STAGE_CACHE[key]
+
+    return stage(spark, sf_dir, "clean_decisions", build, "checkpoint").frame
 
 
 def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3079,10 +2989,7 @@ def _sql_dedup_rate(E, near_pairs_src=None, fps_src=None):
 
 def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir, ("documents",))
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = f"ddr_near_pairs_{_dataset_suffix(sf_dir)}"
-    pairs.createOrReplaceTempView(view)
-    return spark.sql(_sql_dedup_rate(_Spark, near_pairs_src=view))
+    return spark.sql(_sql_dedup_rate(_Spark, near_pairs_src=_minhash_pairs(spark, sf_dir)))
 
 
 QUERIES["dedup_rate_by_source"] = dedup_rate_by_source
@@ -3174,22 +3081,16 @@ def semdedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tail references it four times (mins / p1 / survivors / p2) and
     # Spark re-evaluates CTE references
     emb_view, lists_view = _ivf_stage(spark, sf_dir)
-    key = ("semdedup_grp", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "sd_grp",
-            spark.sql(
-                f"""WITH lb AS ({_lsh_adaptive(_Spark, src=emb_view)})
-                SELECT l.vec_id, l.cent_id, b.band, b.bucket
-                FROM {lists_view} l JOIN lb b ON b.vec_id = l.vec_id"""
-            ),
-        )
-    return spark.sql(
-        _sql_semdedup(
-            _Spark, lists_src=lists_view, emb_src=emb_view,
-            grp_src=_MINHASH_STAGE_CACHE[key],
-        )
+    grp = stage(
+        spark, sf_dir, "sd_grp",
+        lambda: spark.sql(
+            f"""WITH lb AS ({_lsh_adaptive(_Spark, src=emb_view)})
+            SELECT l.vec_id, l.cent_id, b.band, b.bucket
+            FROM {lists_view} l JOIN lb b ON b.vec_id = l.vec_id"""
+        ),
+        "checkpoint",
     )
+    return spark.sql(_sql_semdedup(_Spark, lists_src=lists_view, emb_src=emb_view, grp_src=grp))
 
 
 QUERIES["semdedup_embedding"] = semdedup_embedding
@@ -3221,9 +3122,7 @@ def _sql_minhash_accuracy(E):
 
 
 def minhash_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = f"mh_acc_pairs_{_dataset_suffix(sf_dir)}"
-    pairs.createOrReplaceTempView(view)
+    view = _minhash_pairs(spark, sf_dir)
     _sh, sig, _bands = _minhash_stage(spark, sf_dir)
     matches = _Spark.list_sum_int(
         f"{_Spark.TRANSFORM}({_Spark.seq(1, 32)}, p -> CASE WHEN {_Spark.idx('sa.sigs', 'p')} = {_Spark.idx('sb.sigs', 'p')} THEN 1 ELSE 0 END)"
@@ -3313,9 +3212,7 @@ def _sql_band_scurve(E, sh_src=None, sig_src=None, pairs_src=None):
 
 def minhash_band_scurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh, sig, _bands = _minhash_stage(spark, sf_dir)
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = f"mh_scurve_pairs_{_dataset_suffix(sf_dir)}"
-    pairs.createOrReplaceTempView(view)
+    view = _minhash_pairs(spark, sf_dir)
     return spark.sql(_sql_band_scurve(_Spark, sh_src=sh, sig_src=sig, pairs_src=view))
 
 
@@ -3377,21 +3274,17 @@ def _tf_census_stage(spark: SparkSession, sf_dir: str) -> str:
     rows are identical to its one-shot spelling (which the oracles
     keep). Before this stage the suite exploded the corpus four times
     (r10 finding 11)."""
-    key = ("tf_census", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "tfc_docs")
-        words = _Spark.splitws("lower(text)")
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark,
-            sf_dir,
-            "tf_census",
-            spark.sql(
-                f"""SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf
-                FROM (SELECT doc_id, {_Spark.explode(words, 'w')} FROM {doc_view}) x
-                GROUP BY doc_id, w"""
-            ),
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    words = _Spark.splitws("lower(text)")
+    return stage(
+        spark, sf_dir, "tf_census",
+        lambda: spark.sql(
+            f"""SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf
+            FROM (SELECT doc_id, {_Spark.explode(words, 'w')}
+                  FROM {spread(spark, sf_dir, 'documents')}) x
+            GROUP BY doc_id, w"""
+        ),
+        "checkpoint",
+    )
 
 
 def _bm25_doclen_stage(spark: SparkSession, sf_dir: str) -> str:
@@ -3406,22 +3299,18 @@ def _bm25_doclen_stage(spark: SparkSession, sf_dir: str) -> str:
     census lacks (NULL text explodes to zero rows) at dl = NULL —
     exactly what ``size(NULL)`` yields inline. Verified empirically at
     sf0.001/0.01/0.1: zero mismatching docs."""
-    key = ("bm25_doclen", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
+
+    def build():
         census = _tf_census_stage(spark, sf_dir)
         load_tables(spark, sf_dir, ("documents",))
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark,
-            sf_dir,
-            "bm25_doclen",
-            spark.sql(
-                f"""SELECT d.doc_id, CAST(c.dl AS BIGINT) AS dl
-                FROM documents d
-                LEFT JOIN (SELECT doc_id, SUM(tf) AS dl FROM {census} GROUP BY doc_id) c
-                  ON d.doc_id = c.doc_id"""
-            ),
+        return spark.sql(
+            f"""SELECT d.doc_id, CAST(c.dl AS BIGINT) AS dl
+            FROM documents d
+            LEFT JOIN (SELECT doc_id, SUM(tf) AS dl FROM {census} GROUP BY doc_id) c
+              ON d.doc_id = c.doc_id"""
         )
-    return _MINHASH_STAGE_CACHE[key]
+
+    return stage(spark, sf_dir, "bm25_doclen", build, "checkpoint")
 
 
 def _sql_bm25(E, tfrel: str | None = None, doclenrel: str | None = None):
@@ -3719,9 +3608,7 @@ def _sql_cross_source(E, pairs_src=None):
 
 
 def dedup_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = f"xsrc_pairs_{_dataset_suffix(sf_dir)}"
-    pairs.createOrReplaceTempView(view)
+    view = _minhash_pairs(spark, sf_dir)
     dfs = load_tables(spark, sf_dir, ("documents",))
     _repartition_views(spark, dfs)
     return spark.sql(_sql_cross_source(_Spark, pairs_src=view))
@@ -3853,19 +3740,18 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (32-char fp per word position); a storage-bound 100TB deployment can
     flip to the lazy spelling (_sql_substring_oracle shape) and pay the
     second map pass instead — both are linear."""
-    key = ("span_grams", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "span_docs")
-        # checkpoint, not persist: the census + back-join double reference
-        # partially misses the view-route cache (the Spark 4.1 matching
-        # issue, docs/SCALE.md) — a modest win here (repeats ~1.5 s
-        # persisted vs ~1.3-1.4 s truncated at sf0.1; the census
-        # aggregation itself dominates), taken for consistency with the
-        # other double-referenced stagings
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "span_grams", spark.sql(_substring_grams_sql(_Spark, src=doc_view))
-        )
-    return spark.sql(_substring_census_sql(_MINHASH_STAGE_CACHE[key]))
+    # checkpoint, not persist: the census + back-join double reference
+    # partially misses the view-route cache (the Spark 4.1 matching
+    # miss, docs/SCALE.md) — a modest win here (repeats ~1.5 s
+    # persisted vs ~1.3-1.4 s truncated at sf0.1; the census
+    # aggregation itself dominates), taken for consistency with the
+    # other double-referenced stagings
+    grams = stage(
+        spark, sf_dir, "span_grams",
+        lambda: spark.sql(_substring_grams_sql(_Spark, src=spread(spark, sf_dir, "documents"))),
+        "checkpoint",
+    )
+    return spark.sql(_substring_census_sql(grams))
 
 
 QUERIES["dedup_substring_spans"] = dedup_substring_spans
@@ -3959,14 +3845,13 @@ def _bigram_stage(spark: SparkSession, sf_dir: str) -> str:
     references) on a SINGLE-task scan (single-row-group parquet) —
     measured 20 s for the rcand leg alone at sf0.1 vs 1.1 s in DuckDB.
     Spread across cores + localCheckpoint = every reference reads rows."""
-    key = ("cont_bg", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "cont_docs")
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "cont_bg",
-            spark.sql(f"SELECT doc_id, {_bigram_expr(_Spark)} AS s FROM {doc_view}"),
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "cont_bg",
+        lambda: spark.sql(
+            f"SELECT doc_id, {_bigram_expr(_Spark)} AS s FROM {spread(spark, sf_dir, 'documents')}"
+        ),
+        "checkpoint",
+    )
 
 
 def _containment_cand_prefix(E, bands, prelude="", max_bucket_size=1000, bg_src=None):
@@ -4070,8 +3955,9 @@ def _cand_stage(spark: SparkSession, sf_dir: str) -> str:
     dedup_graph_pagerank — the candidate generation is the expensive
     leg (bands self-join + posting-list join), and every consumer
     otherwise re-paid it inside its own plan."""
-    key = ("cont_cand", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
+    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def build():
         load_tables(spark, sf_dir, ("documents",))
         _sh, _sig, bands = _minhash_stage(spark, sf_dir)
         bg = _bigram_stage(spark, sf_dir)
@@ -4082,17 +3968,16 @@ def _cand_stage(spark: SparkSession, sf_dir: str) -> str:
         # table is large and the session default applies.
         n_docs = spark.table(bg).count()
         npart = max(1, min(spark.sparkContext.defaultParallelism, (100 * n_docs) // 2_000_000 + 1))
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(npart))
-        try:
-            df = spark.sql(
-                f"{_containment_cand_prefix(_Spark, bands, bg_src=bg)}"
-                "\n    SELECT doc_a, doc_b FROM allcand"
-            )
-            _MINHASH_STAGE_CACHE[key] = _checkpoint_view(spark, sf_dir, "cont_cand", df)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    return _MINHASH_STAGE_CACHE[key]
+        return spark.sql(
+            f"{_containment_cand_prefix(_Spark, bands, bg_src=bg)}"
+            "\n    SELECT doc_a, doc_b FROM allcand"
+        )
+
+    try:
+        return stage(spark, sf_dir, "cont_cand", build, "checkpoint")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
 
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4330,19 +4215,13 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is scanned and hashed exactly once (r10 finding 10; the
     earlier persist of olddocs alone still left 2 newdocs hash passes).
     The oracle keeps the single-SQL lazy spelling."""
-    key = ("bloom_allh", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "bloom_docs")
-        allh_view = _checkpoint_view(
-            spark,
-            sf_dir,
-            "bloom_allh",
-            spark.sql(
-                f"SELECT doc_id, source, {_bloom_key(_Spark)} AS h FROM {doc_view}"
-            ),
-        )
-        _MINHASH_STAGE_CACHE[key] = allh_view
-    allh_view = _MINHASH_STAGE_CACHE[key]
+    allh_view = stage(
+        spark, sf_dir, "bloom_allh",
+        lambda: spark.sql(
+            f"SELECT doc_id, source, {_bloom_key(_Spark)} AS h FROM {spread(spark, sf_dir, 'documents')}"
+        ),
+        "checkpoint",
+    )
     olddocs = f"olddocs AS (SELECT h FROM {allh_view} WHERE source <> 'src0'),\n    "
     newdocs = f"newdocs AS ({_newdocs_sql(_Spark, src=allh_view, hcol='h')}),\n    "
     return spark.sql(f"WITH {olddocs}{_bloom_body(_Spark, extra_cte=newdocs)}")
@@ -4386,19 +4265,16 @@ def simhash_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per session+sf_dir — the lazy CTE spelling (kept as the
     oracle) re-evaluates the per-token md5 signature stage ~4x through
     the sh double-reference and the bands self-join."""
-    key = ("simhash_pairs", id(spark), os.path.abspath(sf_dir))
     sh_view, _sig, _bands = _minhash_stage(spark, sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
-        # rides the shared checkpointed signature frame (round-10) so
-        # the signature leg is computed once per session across
-        # dedup_simhash AND this eval, not once per bands reference
-        _MINHASH_STAGE_CACHE[key] = _persist_view(
-            spark,
-            sf_dir,
-            "simhash_pairs",
-            spark.sql(_sql_simhash_tail(_Spark, _simhash_sig_stage(spark, sf_dir))),
-        )
-    return spark.sql(_simhash_accuracy_select(_Spark, _MINHASH_STAGE_CACHE[key], sh_view))
+    # rides the shared checkpointed signature frame (round-10) so the
+    # signature leg is computed once per session across dedup_simhash
+    # AND this eval, not once per bands reference
+    pairs = stage(
+        spark, sf_dir, "simhash_pairs",
+        lambda: spark.sql(_sql_simhash_tail(_Spark, _simhash_sig_stage(spark, sf_dir))),
+        "persist",
+    )
+    return spark.sql(_simhash_accuracy_select(_Spark, pairs, sh_view))
 
 
 QUERIES["simhash_accuracy_eval"] = simhash_accuracy_eval
@@ -4632,19 +4508,24 @@ def _sql_ann_pq(E):
 def _pq_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Persisted PQ index staging (emb_view, codebook, codes), shared by
     ann_pq_cosine / pq_recall_eval / ann_ivfpq_cosine — the PQ index
-    build pays once per session+sf_dir behind private per-dataset views
-    (the minhash-staging rule)."""
-    key = ("pq", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        emb_view = _spread_view(spark, sf_dir, "embeddings", "pq_emb")
-        cb_view = _persist_view(
-            spark, sf_dir, "pq_cb", spark.sql(_sql_pq_codebook(_Spark).replace("embeddings", emb_view))
+    build pays once per session+sf_dir."""
+
+    def emb():
+        return spread(spark, sf_dir, "embeddings")
+
+    def cb():
+        return stage(
+            spark, sf_dir, "pq_cb",
+            lambda: spark.sql(_sql_pq_codebook(_Spark).replace("embeddings", emb())),
+            "persist",
         )
-        codes_view = _persist_view(
-            spark, sf_dir, "pq_codes", spark.sql(_sql_pq_codes(_Spark, cb_view).replace("embeddings", emb_view))
-        )
-        _MINHASH_STAGE_CACHE[key] = (emb_view, cb_view, codes_view)
-    return _MINHASH_STAGE_CACHE[key]
+
+    codes_view = stage(
+        spark, sf_dir, "pq_codes",
+        lambda: spark.sql(_sql_pq_codes(_Spark, cb()).replace("embeddings", emb())),
+        "persist",
+    )
+    return emb(), cb(), codes_view
 
 
 def ann_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4697,9 +4578,7 @@ def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged: the retrieved side reuses ann_pq_cosine's persisted
     codebook/codes; the truth side runs the bounded brute-force scan.
     The oracle keeps both as lazy subqueries."""
-    retr = ann_pq_cosine(spark, sf_dir)
-    view = f"pq_retr_{_dataset_suffix(sf_dir)}"
-    retr.createOrReplaceTempView(view)
+    view = stage(spark, sf_dir, "pq_retr", lambda: ann_pq_cosine(spark, sf_dir), "view")
     dfs = load_tables(spark, sf_dir, ("embeddings",))
     _repartition_views(spark, dfs)
     return spark.sql(_pq_recall_select(_Spark, view))
@@ -4843,29 +4722,25 @@ def _bpe_stage(spark: SparkSession, sf_dir: str) -> tuple[list, str]:
     lazy spelling (which the oracles keep; DuckDB materializes
     multi-referenced CTEs). Returns ([best1..bestK views], final
     vocabulary view)."""
-    key = ("bpe", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "bpe_docs")
-        words_view = _checkpoint_view(
-            spark, sf_dir, "bpe_words0", spark.sql(_bpe_words0(_Spark, doc_view))
+    words_view = stage(
+        spark, sf_dir, "bpe_words0",
+        lambda: spark.sql(_bpe_words0(_Spark, spread(spark, sf_dir, "documents"))),
+        "checkpoint",
+    )
+    best_views = []
+    for k in range(1, _BPE_MERGES + 1):
+        best_view = stage(
+            spark, sf_dir, f"bpe_best{k}",
+            lambda w=words_view: spark.sql(_bpe_best(_Spark, f"({_bpe_pairs(_Spark, w)})")),
+            "checkpoint",
         )
-        best_views = []
-        for k in range(1, _BPE_MERGES + 1):
-            best_view = _checkpoint_view(
-                spark,
-                sf_dir,
-                f"bpe_best{k}",
-                spark.sql(_bpe_best(_Spark, f"({_bpe_pairs(_Spark, words_view)})")),
-            )
-            best_views.append(best_view)
-            words_view = _checkpoint_view(
-                spark,
-                sf_dir,
-                f"bpe_words{k}",
-                spark.sql(_bpe_merge(_Spark, words_view, best_view)),
-            )
-        _MINHASH_STAGE_CACHE[key] = (best_views, words_view)
-    return _MINHASH_STAGE_CACHE[key]
+        best_views.append(best_view)
+        words_view = stage(
+            spark, sf_dir, f"bpe_words{k}",
+            lambda w=words_view, b=best_view: spark.sql(_bpe_merge(_Spark, w, b)),
+            "checkpoint",
+        )
+    return best_views, words_view
 
 
 def tokenize_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4915,8 +4790,7 @@ def _sql_bpe_apply(E, src="documents"):
 
 def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     _bests, vocab_view = _bpe_stage(spark, sf_dir)
-    doc_view = _spread_view(spark, sf_dir, "documents", "bpe_docs")
-    return spark.sql(_bpe_apply_select(_Spark, doc_view, vocab_view))
+    return spark.sql(_bpe_apply_select(_Spark, spread(spark, sf_dir, "documents"), vocab_view))
 
 
 QUERIES["tokenize_bpe_apply"] = tokenize_bpe_apply
@@ -5085,13 +4959,11 @@ def _dsir_stage(spark: SparkSession, sf_dir: str) -> str:
     """The bucket stream is referenced twice per query (census + per-doc
     scoring) and by two queries — checkpoint it once per session+sf_dir
     (the double-reference view-cache miss, docs/SCALE.md)."""
-    key = ("dsir_buck", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "dsir_docs")
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "dsir_buck", spark.sql(_dsir_buck_sql(_Spark, src=doc_view))
-        )
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "dsir_buck",
+        lambda: spark.sql(_dsir_buck_sql(_Spark, src=spread(spark, sf_dir, "documents"))),
+        "checkpoint",
+    )
 
 
 def _dsir_select(E, buck):
@@ -5281,13 +5153,15 @@ def dedup_span_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side explode + uniform-md5-key census as dedup_substring_spans.
     Cites Lee et al. "Deduplicating Training Data Makes Language Models
     Better" (the span-removal threshold is run length, not coverage)."""
-    key = ("span_pos", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "spanrun_docs")
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "span_pos", spark.sql(_span_pos_sql(_Spark, src=doc_view))
-        )
-    return spark.sql(_span_runs_select(_Spark, _MINHASH_STAGE_CACHE[key]))
+    return spark.sql(_span_runs_select(_Spark, _span_pos_stage(spark, sf_dir)))
+
+
+def _span_pos_stage(spark: SparkSession, sf_dir: str) -> str:
+    return stage(
+        spark, sf_dir, "span_pos",
+        lambda: spark.sql(_span_pos_sql(_Spark, src=spread(spark, sf_dir, "documents"))),
+        "checkpoint",
+    )
 
 
 QUERIES["dedup_span_runs"] = dedup_span_runs
@@ -5406,22 +5280,14 @@ def _span_perdoc_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     clipped docs only (95 rows at sf0.01 — bounded, a small fraction of
     the corpus at any scale), so the checkpoint is free. Returns
     (docs_view, perdoc_view)."""
-    doc_view = _spread_view(spark, sf_dir, "documents", "spanrun_docs")
-    pos_key = ("span_pos", id(spark), os.path.abspath(sf_dir))
-    if pos_key not in _MINHASH_STAGE_CACHE:
-        _MINHASH_STAGE_CACHE[pos_key] = _checkpoint_view(
-            spark, sf_dir, "span_pos", spark.sql(_span_pos_sql(_Spark, src=doc_view))
-        )
-    key = ("span_perdoc", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        perdoc_df = spark.sql(
-            f"WITH {_span_clip_ctes(_Spark, _MINHASH_STAGE_CACHE[pos_key])} "
-            "SELECT * FROM perdoc"
-        )
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "span_perdoc", perdoc_df
-        )
-    return doc_view, _MINHASH_STAGE_CACHE[key]
+    perdoc_view = stage(
+        spark, sf_dir, "span_perdoc",
+        lambda: spark.sql(
+            f"WITH {_span_clip_ctes(_Spark, _span_pos_stage(spark, sf_dir))} SELECT * FROM perdoc"
+        ),
+        "checkpoint",
+    )
+    return spread(spark, sf_dir, "documents"), perdoc_view
 
 
 def dedup_substring_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5680,20 +5546,16 @@ def _nnd_graphs(spark: SparkSession, sf_dir: str) -> tuple[str, str, str, str]:
     """The checkpointed NN-Descent iteration views, shared by the
     convergence report and the graph-search eval (built once per
     session+sf_dir)."""
-    emb_view = _spread_view(spark, sf_dir, "embeddings", "nnd_emb")
-    key = ("nnd_g", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        g0 = _checkpoint_view(
-            spark, sf_dir, "nnd_g0", spark.sql(_nnd_init_sql(_Spark, src=emb_view))
-        )
-        g1 = _checkpoint_view(
-            spark, sf_dir, "nnd_g1", spark.sql(_nnd_step_sql(_Spark, g0, src=emb_view))
-        )
-        g2 = _checkpoint_view(
-            spark, sf_dir, "nnd_g2", spark.sql(_nnd_step_sql(_Spark, g1, src=emb_view))
-        )
-        _MINHASH_STAGE_CACHE[key] = (g0, g1, g2)
-    g0, g1, g2 = _MINHASH_STAGE_CACHE[key]
+    emb_view = spread(spark, sf_dir, "embeddings")
+    g0 = stage(
+        spark, sf_dir, "nnd_g0", lambda: spark.sql(_nnd_init_sql(_Spark, src=emb_view)), "checkpoint"
+    )
+    g1 = stage(
+        spark, sf_dir, "nnd_g1", lambda: spark.sql(_nnd_step_sql(_Spark, g0, src=emb_view)), "checkpoint"
+    )
+    g2 = stage(
+        spark, sf_dir, "nnd_g2", lambda: spark.sql(_nnd_step_sql(_Spark, g1, src=emb_view)), "checkpoint"
+    )
     return emb_view, g0, g1, g2
 
 
@@ -5990,15 +5852,18 @@ def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(npart))
     try:
-        ew = _checkpoint_view(spark, sf_dir, "pr_ew", spark.sql(_pr_ew_sql(view)))
-        r = _checkpoint_view(
-            spark,
-            sf_dir,
-            "pr_r0",
-            spark.sql(f"SELECT DISTINCT src AS node, CAST(1000000 AS BIGINT) AS score FROM {ew} e0"),
+        ew = stage(spark, sf_dir, "pr_ew", lambda: spark.sql(_pr_ew_sql(view)), "checkpoint")
+        r = stage(
+            spark, sf_dir, "pr_r0",
+            lambda: spark.sql(f"SELECT DISTINCT src AS node, CAST(1000000 AS BIGINT) AS score FROM {ew} e0"),
+            "checkpoint",
         )
         for k in range(1, 5):
-            r = _checkpoint_view(spark, sf_dir, f"pr_r{k}", spark.sql(_pr_round_sql(_Spark, ew, r)))
+            r = stage(
+                spark, sf_dir, f"pr_r{k}",
+                lambda r=r: spark.sql(_pr_round_sql(_Spark, ew, r)),
+                "checkpoint",
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return spark.sql(_pr_final_sql(ew, r))
@@ -6206,19 +6071,21 @@ def _gs_final_sql(E, hops, src):
 
 def ann_graph_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_view, _g0, _g1, g2 = _nnd_graphs(spark, sf_dir)
-    q_view = _checkpoint_view(spark, sf_dir, "gs_q", spark.sql(_gs_q_sql(_Spark, emb_view)))
-    entry_view = _checkpoint_view(
-        spark, sf_dir, "gs_entry", spark.sql(_gs_entry_sql(_Spark, emb_view))
+    q_view = stage(spark, sf_dir, "gs_q", lambda: spark.sql(_gs_q_sql(_Spark, emb_view)), "checkpoint")
+    entry_view = stage(
+        spark, sf_dir, "gs_entry", lambda: spark.sql(_gs_entry_sql(_Spark, emb_view)), "checkpoint"
     )
-    s = _checkpoint_view(
+    s = stage(
         spark, sf_dir, "gs_s0",
-        spark.sql(_gs_s0_sql(_Spark, emb_view, q=q_view, entry=entry_view)),
+        lambda: spark.sql(_gs_s0_sql(_Spark, emb_view, q=q_view, entry=entry_view)),
+        "checkpoint",
     )
     hops = [(0, s)]
     for h in range(1, _GS_HOPS + 1):
-        s = _checkpoint_view(
+        s = stage(
             spark, sf_dir, f"gs_s{h}",
-            spark.sql(_gs_step_sql(_Spark, s, g2, emb_view, q=q_view)),
+            lambda s=s: spark.sql(_gs_step_sql(_Spark, s, g2, emb_view, q=q_view)),
+            "checkpoint",
         )
         hops.append((h, s))
     return spark.sql("WITH " + _gs_final_sql(_Spark, hops, emb_view))
@@ -6314,31 +6181,32 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions 32x per BroadcastNLJ round (32 -> 1024 -> 32768 tasks
     # by round 3 at sf0.001) — collect-and-inline removes the join
     # entirely. The oracle keeps the relational CROSS JOIN spelling.
-    src = _spread_view(spark, sf_dir, "embeddings", "kc_emb")
+    src = spread(spark, sf_dir, "embeddings")
     sq = _Spark.sqdist
 
-    def _lit(vec):
-        return "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in vec) + ")"
+    def _lit(vec_id):
+        emb = spark.sql(f"SELECT embedding FROM {src} WHERE vec_id = {vec_id}").collect()[0][0]
+        return "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in emb) + ")"
 
     c1_id = spark.sql(_kc_seed_sql(_Spark, src)).collect()[0][0]
-    emb = spark.sql(f"SELECT embedding FROM {src} WHERE vec_id = {c1_id}").collect()[0][0]
-    d = _checkpoint_view(
+    d = stage(
         spark, sf_dir, "kc_d1",
-        spark.sql(
-            f"SELECT vec_id, embedding, ROUND({sq('embedding', _lit(emb))}, 6) AS dmin FROM {src} e"
+        lambda: spark.sql(
+            f"SELECT vec_id, embedding, ROUND({sq('embedding', _lit(c1_id))}, 6) AS dmin FROM {src} e"
         ),
+        "checkpoint",
     )
     selected = [(c1_id, "CAST(0.0 AS DOUBLE)")]
     for k in range(2, _KC_K + 1):
         cid, dist = spark.sql(_kc_next_sql(_Spark, d)).collect()[0]
         selected.append((cid, f"CAST('{dist!r}' AS DOUBLE)"))
         if k < _KC_K:
-            emb = spark.sql(f"SELECT embedding FROM {src} WHERE vec_id = {cid}").collect()[0][0]
-            d = _checkpoint_view(
+            d = stage(
                 spark, sf_dir, f"kc_d{k}",
-                spark.sql(
-                    f"SELECT vec_id, embedding, LEAST(dmin, ROUND({sq('embedding', _lit(emb))}, 6)) AS dmin FROM {d} d"
+                lambda d=d, cid=cid: spark.sql(
+                    f"SELECT vec_id, embedding, LEAST(dmin, ROUND({sq('embedding', _lit(cid))}, 6)) AS dmin FROM {d} d"
                 ),
+                "checkpoint",
             )
     rows = "\n    UNION ALL ".join(
         f"SELECT CAST({i} AS INT) AS sel_order, CAST({cid} AS BIGINT) AS vec_id, {dist} AS dist_to_centers"
@@ -6480,8 +6348,7 @@ def _sql_graph_triangles(E, pairs_src=None):
 
 
 def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = _checkpoint_view(spark, sf_dir, "tri_pairs", pairs)
+    view = stage(spark, sf_dir, "tri_pairs", lambda: _minhash_pairs(spark, sf_dir).frame, "checkpoint")
     return spark.sql(_sql_graph_triangles(_Spark, pairs_src=view))
 
 
@@ -6557,7 +6424,7 @@ def _sql_hll_words(E):
 
 def _sql_hll_distinct(E, srcrel: str | None = None):
     # src_words is referenced TWICE (sketch leg + exact-audit leg): the
-    # Spark runner stages it through _checkpoint_view and passes the view
+    # Spark runner stages it as a checkpoint and passes the view
     # name as ``srcrel`` (one tokenize + one distinct shuffle total); the
     # DuckDB oracle materializes the CTE for the same reason.
     h = E.hex2int("substring(md5(w), 1, 15)")
@@ -6613,14 +6480,12 @@ def _hll_words_stage(spark: SparkSession, sf_dir: str) -> str:
     """Checkpointed DISTINCT (source, word) frame shared by the sketch and
     exact-audit legs — one tokenize + one distinct shuffle per dataset
     (lineage-truncated so view re-registration cannot uncache it)."""
-    key = ("hll_words", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        dfs = load_tables(spark, sf_dir, ("documents",))
-        _repartition_views(spark, dfs)
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "hll_words", spark.sql(_sql_hll_words(_Spark))
-        )
-    return _MINHASH_STAGE_CACHE[key]
+
+    def build():
+        _repartition_views(spark, load_tables(spark, sf_dir, ("documents",)))
+        return spark.sql(_sql_hll_words(_Spark))
+
+    return stage(spark, sf_dir, "hll_words", build, "checkpoint")
 
 
 def _hll_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6922,8 +6787,7 @@ def _sql_degree_powerlaw(E, pairs_src=None):
 
 
 def dedup_graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = _checkpoint_view(spark, sf_dir, "pl_pairs", pairs)
+    view = stage(spark, sf_dir, "pl_pairs", lambda: _minhash_pairs(spark, sf_dir).frame, "checkpoint")
     return spark.sql(_sql_degree_powerlaw(_Spark, pairs_src=view))
 
 
@@ -7334,9 +7198,7 @@ def _sql_editdistance(E, pairs_src=None):
 def dedup_editdistance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfs = load_tables(spark, sf_dir, ("documents",))
     _repartition_views(spark, dfs)
-    pairs = dedup_containment(spark, sf_dir)
-    view = f"ed_pairs_{_dataset_suffix(sf_dir)}"
-    pairs.createOrReplaceTempView(view)
+    view = stage(spark, sf_dir, "ed_pairs", lambda: dedup_containment(spark, sf_dir), "view")
     return spark.sql(_sql_editdistance(_Spark, pairs_src=view))
 
 
@@ -7517,8 +7379,7 @@ def _sql_assortativity(E, pairs_src=None):
 
 
 def dedup_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = _checkpoint_view(spark, sf_dir, "as_pairs", pairs)
+    view = stage(spark, sf_dir, "as_pairs", lambda: _minhash_pairs(spark, sf_dir).frame, "checkpoint")
     return spark.sql(_sql_assortativity(_Spark, pairs_src=view))
 
 
@@ -7786,7 +7647,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     mh_view = _minhash_pairs_ckpt(spark, sf_dir)
     dfs = load_tables(spark, sf_dir, ("documents",))
     _repartition_views(spark, dfs)
-    sh_view = _checkpoint_view(spark, sf_dir, "ma_sh", spark.sql(_sql_simhash(_Spark)))
+    sh_view = stage(spark, sf_dir, "ma_sh", lambda: spark.sql(_sql_simhash(_Spark)), "checkpoint")
     return spark.sql(_sql_method_agreement(_Spark, mh_src=mh_view, sh_src=sh_view))
 
 
@@ -7990,15 +7851,13 @@ def _prf_tf_stage(spark: SparkSession, sf_dir: str) -> str:
     KEY, so this equals _sql_prf_tf's explode->filter->group row for
     row (the oracle keeps that one-shot spelling). A plain view: the
     filter re-runs per reference over checkpointed rows, no re-explode."""
-    key = ("prf_tf", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        census = _tf_census_stage(spark, sf_dir)
-        view = f"prf_tf_{_dataset_suffix(sf_dir)}"
-        spark.sql(
-            f"SELECT doc_id, w, tf FROM {census} WHERE w IS NOT NULL AND w <> ''"
-        ).createOrReplaceTempView(view)
-        _MINHASH_STAGE_CACHE[key] = view
-    return _MINHASH_STAGE_CACHE[key]
+    return stage(
+        spark, sf_dir, "prf_tf",
+        lambda: spark.sql(
+            f"SELECT doc_id, w, tf FROM {_tf_census_stage(spark, sf_dir)} WHERE w IS NOT NULL AND w <> ''"
+        ),
+        "view",
+    )
 
 
 def _prf_idx_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str, str, str]:
@@ -8010,19 +7869,13 @@ def _prf_idx_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str, str, str
     1.4-2.0 s warm-staged). All three derived frames are bounded
     (docs / vocabulary / scalar), so the checkpoints are free."""
     tf = _prf_tf_stage(spark, sf_dir)
-    key = ("prf_idx", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doclen = _checkpoint_view(
-            spark, sf_dir, "prf_doclen", spark.sql(_sql_prf_doclen(_Spark, tf))
-        )
-        stats = _checkpoint_view(
-            spark, sf_dir, "prf_stats", spark.sql(_sql_prf_stats(_Spark, doclen))
-        )
-        dfv = _checkpoint_view(
-            spark, sf_dir, "prf_df", spark.sql(_sql_prf_df(_Spark, tf))
-        )
-        _MINHASH_STAGE_CACHE[key] = (doclen, stats, dfv)
-    doclen, stats, dfv = _MINHASH_STAGE_CACHE[key]
+    doclen = stage(
+        spark, sf_dir, "prf_doclen", lambda: spark.sql(_sql_prf_doclen(_Spark, tf)), "checkpoint"
+    )
+    stats = stage(
+        spark, sf_dir, "prf_stats", lambda: spark.sql(_sql_prf_stats(_Spark, doclen)), "checkpoint"
+    )
+    dfv = stage(spark, sf_dir, "prf_df", lambda: spark.sql(_sql_prf_df(_Spark, tf)), "checkpoint")
     return tf, doclen, dfv, stats
 
 
@@ -9170,14 +9023,14 @@ _DQI_REPORT = """
 def dedup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfs = load_tables(spark, sf_dir, ("documents",))
     _repartition_views(spark, dfs)
-    members = _minhash_members(spark, sf_dir)
-    mv = _persist_view(spark, sf_dir, "dqi_members", members.select("doc_id"))
-    cells = spark.sql(_dedup_quality_cells(_Spark, mv))
-    cells.createOrReplaceTempView(f"dqi_cells_{_dataset_suffix(sf_dir)}")
-    return spark.sql(
-        "WITH cells AS (SELECT * FROM dqi_cells_" + _dataset_suffix(sf_dir) + ")"
-        + _DQI_REPORT
-    )
+
+    def members():
+        return stage(
+            spark, sf_dir, "dqi_members", lambda: _minhash_members(spark, sf_dir).select("doc_id"), "persist"
+        )
+
+    cells = stage(spark, sf_dir, "dqi_cells", lambda: spark.sql(_dedup_quality_cells(_Spark, members())), "view")
+    return spark.sql(f"WITH cells AS (SELECT * FROM {cells})" + _DQI_REPORT)
 
 
 def _sql_dqi_duck():
@@ -9702,13 +9555,18 @@ _WINNOW_PAIRS_SQL = """
 """
 
 
+def _winnow_fp_stage(spark: SparkSession, sf_dir: str) -> str:
+    return stage(
+        spark, sf_dir, "wn_fp",
+        lambda: spark.sql(
+            _winnow_fp_sql(_Spark).replace("FROM documents", f"FROM {spread(spark, sf_dir, 'documents')}")
+        ),
+        "checkpoint",
+    )
+
+
 def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("winnow_fp", id(spark), sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
-        _spread_view(spark, sf_dir, "documents", "wn_docs")
-        fp_df = spark.sql(_winnow_fp_sql(_Spark).replace("FROM documents", f"FROM wn_docs_{_dataset_suffix(sf_dir)}"))
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(spark, sf_dir, "wn_fp", fp_df)
-    return spark.sql(_WINNOW_PAIRS_SQL.format(V=_MINHASH_STAGE_CACHE[key]))
+    return spark.sql(_WINNOW_PAIRS_SQL.format(V=_winnow_fp_stage(spark, sf_dir)))
 
 
 QUERIES["dedup_winnowing"] = dedup_winnowing
@@ -9877,16 +9735,14 @@ _RAKE_OUT_SQL = """
 
 
 def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("rake_pw", id(spark), sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
-        _spread_view(spark, sf_dir, "documents", "rk_docs")
-        pw_df = spark.sql(
-            _rake_pw_sql(_Spark).replace(
-                "FROM documents", f"FROM rk_docs_{_dataset_suffix(sf_dir)}"
-            )
-        )
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(spark, sf_dir, "rk_pw", pw_df)
-    return spark.sql(_RAKE_OUT_SQL.format(V=_MINHASH_STAGE_CACHE[key]))
+    pw = stage(
+        spark, sf_dir, "rk_pw",
+        lambda: spark.sql(
+            _rake_pw_sql(_Spark).replace("FROM documents", f"FROM {spread(spark, sf_dir, 'documents')}")
+        ),
+        "checkpoint",
+    )
+    return spark.sql(_RAKE_OUT_SQL.format(V=pw))
 
 
 QUERIES["text_keyword_rake"] = text_keyword_rake
@@ -10078,21 +9934,16 @@ def _winnow_eval_sql(E, V, G):
 
 
 def winnowing_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("winnow_fp", id(spark), sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
-        dedup_winnowing(spark, sf_dir)  # builds + caches the fp stage
-    gkey = ("winnow_grams", id(spark), sf_dir)
-    if gkey not in _MINHASH_STAGE_CACHE:
-        _spread_view(spark, sf_dir, "documents", "wg_docs")
-        g_df = spark.sql(
-            _winnow_grams_sql(_Spark).replace(
-                "FROM documents", f"FROM wg_docs_{_dataset_suffix(sf_dir)}"
-            )
-        )
-        _MINHASH_STAGE_CACHE[gkey] = _checkpoint_view(spark, sf_dir, "wn_grams", g_df)
+    grams = stage(
+        spark, sf_dir, "wn_grams",
+        lambda: spark.sql(
+            _winnow_grams_sql(_Spark).replace("FROM documents", f"FROM {spread(spark, sf_dir, 'documents')}")
+        ),
+        "checkpoint",
+    )
     return spark.sql(
         _winnow_eval_sql(
-            _Spark, _MINHASH_STAGE_CACHE[key], _MINHASH_STAGE_CACHE[gkey]
+            _Spark, _winnow_fp_stage(spark, sf_dir), grams
         )
     )
 
@@ -10161,26 +10012,29 @@ def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("bigint").alias("w"),
         F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint").alias("words"),
     )
-    ranked, n, total = _exact_rank_stage(
-        spark, sf_dir, "pps_stage", census, "hk", "doc_id",
-        desc=False, sum_col="wdec",
-    )
-    W = int(total)
-    stats = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("words").cast("long").alias("total_words"),
-    ).collect()[0]
-    frame = ranked.select(
-        "doc_id", "w", "words",
-        F.col("_cum").cast("bigint").alias("c"),
-        F.lit(int(stats["n_docs"])).cast("long").alias("n_docs"),
-        F.lit(int(stats["total_words"])).cast("long").alias("total_words"),
-    )
-    frame.createOrReplaceTempView(f"pps_frame_{_dataset_suffix(sf_dir)}")
-    return spark.sql(
-        _pps_tail_sql(f"pps_frame_{_dataset_suffix(sf_dir)}", W, _PPS_K)
-        .format(div="DIV")
-    )
+
+    def rank():
+        return _exact_rank_stage(
+            spark, sf_dir, "pps_stage", census, "hk", "doc_id",
+            desc=False, sum_col="wdec",
+        )
+
+    def build():
+        ranked, _n, _total = rank()
+        stats = ranked.agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("words").cast("long").alias("total_words"),
+        ).collect()[0]
+        return ranked.select(
+            "doc_id", "w", "words",
+            F.col("_cum").cast("bigint").alias("c"),
+            F.lit(int(stats["n_docs"])).cast("long").alias("n_docs"),
+            F.lit(int(stats["total_words"])).cast("long").alias("total_words"),
+        )
+
+    frame = stage(spark, sf_dir, "pps_frame", build, "view")
+    W = int(rank()[2])
+    return spark.sql(_pps_tail_sql(frame, W, _PPS_K).format(div="DIV"))
 
 
 def _pps_oracle() -> str:
@@ -10274,8 +10128,8 @@ _W1_BODY = """
 
 
 def doc_length_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("w1_census", id(spark), sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
+
+    def build():
         docs = load_tables(spark, sf_dir, ("documents",))["documents"]
         census = (
             docs.groupBy("lang", "n_chars")
@@ -10283,10 +10137,10 @@ def doc_length_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         census.count()
-        view = f"w1_census_{_dataset_suffix(sf_dir)}"
-        census.createOrReplaceTempView(view)
-        _MINHASH_STAGE_CACHE[key] = view
-    return spark.sql("WITH " + _W1_BODY.format(census=_MINHASH_STAGE_CACHE[key]))
+        return census
+
+    census = stage(spark, sf_dir, "w1_census", build, "persist")
+    return spark.sql("WITH " + _W1_BODY.format(census=census))
 
 
 QUERIES["doc_length_wasserstein"] = doc_length_wasserstein
@@ -10513,9 +10367,7 @@ def _sql_minhash_1bit(E, sig_src=None, pairs_src=None):
 
 
 def minhash_1bit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _minhash_pairs(spark, sf_dir)
-    view = f"mh_1bit_pairs_{_dataset_suffix(sf_dir)}"
-    pairs.createOrReplaceTempView(view)
+    view = _minhash_pairs(spark, sf_dir)
     _sh, sig, _bands = _minhash_stage(spark, sf_dir)
     return spark.sql(_sql_minhash_1bit(_Spark, sig_src=sig, pairs_src=view))
 
@@ -10587,22 +10439,19 @@ _DELTA_BODY = """
 
 
 def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("delta_census", id(spark), sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
-        _spread_view(spark, sf_dir, "documents", "bd_docs")
+
+    def build():
         census = spark.sql(f"""
             SELECT source, word, CAST(COUNT(*) AS BIGINT) AS c
             FROM (SELECT source, {_Spark.explode(_Spark.splitws('lower(text)'), 'word')}
-                  FROM bd_docs_{_dataset_suffix(sf_dir)}) t
+                  FROM {spread(spark, sf_dir, 'documents')}) t
             GROUP BY source, word
         """).persist()
         census.count()
-        view = f"bd_census_{_dataset_suffix(sf_dir)}"
-        census.createOrReplaceTempView(view)
-        _MINHASH_STAGE_CACHE[key] = view
-    return spark.sql(
-        "WITH " + _DELTA_BODY.format(census=_MINHASH_STAGE_CACHE[key], MAT="")
-    )
+        return census
+
+    census = stage(spark, sf_dir, "bd_census", build, "persist")
+    return spark.sql("WITH " + _DELTA_BODY.format(census=census, MAT=""))
 
 
 QUERIES["text_burrows_delta"] = text_burrows_delta
@@ -10817,16 +10666,13 @@ def _agreement_tail_sql(wp, mp):
 
 
 def winnowing_minhash_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("winnow_fp", id(spark), sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
-        dedup_winnowing(spark, sf_dir)
     # checkpointed pair rows, NOT a lazy temp view over the persisted
     # frame — the Spark 4.1 re-canonicalization cache-miss trap (see
     # _minhash_pairs_ckpt)
     view = _minhash_pairs_ckpt(spark, sf_dir)
     return spark.sql(
         _agreement_tail_sql(
-            _winnow_pairs4_sql(_Spark, _MINHASH_STAGE_CACHE[key]),
+            _winnow_pairs4_sql(_Spark, _winnow_fp_stage(spark, sf_dir)),
             f"SELECT doc_a, doc_b FROM {view}",
         )
     )
@@ -10990,19 +10836,17 @@ def _prefix_filter_tail(E, pfx, sh):
 
 def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh, _sig, _bands = _minhash_stage(spark, sf_dir)
-    key = ("pf_prefix", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        # the prefix postings are referenced three times (df valve + both
-        # self-join sides); Spark re-evaluates CTE references, so the
-        # corpus-scale explode/census/rank chain is checkpointed once
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "pf_prefix",
-            spark.sql(
-                "WITH " + _prefix_filter_prefix(_Spark, sh).lstrip()
-                + "\n    SELECT doc_id, w, n FROM pfx"
-            ),
-        )
-    pview = _MINHASH_STAGE_CACHE[key]
+    # the prefix postings are referenced three times (df valve + both
+    # self-join sides); Spark re-evaluates CTE references, so the
+    # corpus-scale explode/census/rank chain is checkpointed once
+    pview = stage(
+        spark, sf_dir, "pf_prefix",
+        lambda: spark.sql(
+            "WITH " + _prefix_filter_prefix(_Spark, sh).lstrip()
+            + "\n    SELECT doc_id, w, n FROM pfx"
+        ),
+        "checkpoint",
+    )
     return spark.sql("WITH " + _prefix_filter_tail(_Spark, pview, sh).lstrip())
 
 
@@ -11070,7 +10914,7 @@ def _sql_snm_tail(E, sh, docs="documents"):
 
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh, _sig, _bands = _minhash_stage(spark, sf_dir)
-    doc_view = _spread_view(spark, sf_dir, "documents", "snm_docs")
+    doc_view = spread(spark, sf_dir, "documents")
     return spark.sql("WITH " + _sql_snm_tail(_Spark, sh, docs=doc_view).lstrip())
 
 
@@ -11287,20 +11131,15 @@ def privacy_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle keeps the lazy spelling under AS MATERIALIZED."""
     dfs = load_tables(spark, sf_dir, ("orders", "customer"))
     _repartition_views(spark, dfs)
-    key = ("tclose_emd", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark,
-            sf_dir,
-            "tclose_emd",
-            spark.sql(
-                f"WITH {_tclose_census_ctes(_Spark)},\n    "
-                f"{_tclose_post_cells(_Spark)}\n    SELECT * FROM emd"
-            ),
-        )
-    return spark.sql(
-        "WITH " + _tclose_tail(_Spark, _MINHASH_STAGE_CACHE[key]).lstrip()
+    emd = stage(
+        spark, sf_dir, "tclose_emd",
+        lambda: spark.sql(
+            f"WITH {_tclose_census_ctes(_Spark)},\n    "
+            f"{_tclose_post_cells(_Spark)}\n    SELECT * FROM emd"
+        ),
+        "checkpoint",
     )
+    return spark.sql("WITH " + _tclose_tail(_Spark, emd).lstrip())
 
 
 QUERIES["privacy_t_closeness_audit"] = privacy_t_closeness_audit
@@ -11490,20 +11329,18 @@ def _mmr_final_cols(E):
 
 
 def sample_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("mmr_pool", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        emb = _spread_view(spark, sf_dir, "embeddings", "mmr_emb")
-        qv = _persist_view(
-            spark, sf_dir, "mmr_q", spark.sql(_mmr_qseed_sql(_Spark, emb))
+    emb = spread(spark, sf_dir, "embeddings")
+
+    def build_pool():
+        qv = stage(
+            spark, sf_dir, "mmr_q",
+            lambda: spark.sql(_mmr_qseed_sql(_Spark, spread(spark, sf_dir, "embeddings"))),
+            "persist",
         )
-        pool = _checkpoint_view(
-            spark, sf_dir, "mmr_pool", spark.sql(_mmr_pool_sql(_Spark, emb, qv))
-        )
-        sims = _checkpoint_view(
-            spark, sf_dir, "mmr_sims", spark.sql(_mmr_sims_sql(_Spark, pool))
-        )
-        _MINHASH_STAGE_CACHE[key] = (pool, sims)
-    pool, sims = _MINHASH_STAGE_CACHE[key]
+        return spark.sql(_mmr_pool_sql(_Spark, emb, qv))
+
+    pool = stage(spark, sf_dir, "mmr_pool", build_pool, "checkpoint")
+    sims = stage(spark, sf_dir, "mmr_sims", lambda: spark.sql(_mmr_sims_sql(_Spark, pool)), "checkpoint")
     # round 1: pure relevance argmax (no redundancy yet)
     first = spark.sql(
         f"SELECT vec_id, rel FROM {pool} ORDER BY rel DESC, vec_id LIMIT 1"
@@ -11585,8 +11422,7 @@ def _aspect_media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the single-row-group documents scan so the CPU-bound BMP
     # encode runs as N parallel tasks, not one (the staging-discipline
     # rule; a 100TB scan already has thousands of splits and skips this)
-    doc_view = _spread_view(spark, sf_dir, "documents", "aspect_docs")
-    docs = spark.table(doc_view).select("doc_id")
+    docs = spark.table(spread(spark, sf_dir, "documents")).select("doc_id")
 
     def encode_batch(batches):
         for pdf in batches:
@@ -11632,12 +11468,8 @@ def multimodal_aspect_bucket_plan(spark: SparkSession, sf_dir: str) -> DataFrame
     # view would run the whole encode+header-parse chain twice, so the
     # 4-column dims frame is checkpointed once (rows, not lineage) and
     # both CTE legs read the materialized partitions
-    key = ("aspect_dims", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "aspect_dims", _aspect_dims_frame(spark, sf_dir)
-        )
-    return spark.sql(_aspect_bucket_tail(_Spark, _MINHASH_STAGE_CACHE[key]))
+    dims = stage(spark, sf_dir, "aspect_dims", lambda: _aspect_dims_frame(spark, sf_dir), "checkpoint")
+    return spark.sql(_aspect_bucket_tail(_Spark, dims))
 
 
 def _aspect_bucket_tail(E, dims_rel):
@@ -11968,25 +11800,21 @@ def _dup_weight_tail(E, docs, msize):
 
 
 def sample_dup_aware_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    members = _minhash_members(spark, sf_dir)
-    key = ("daw_msize", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        # the (doc_id, n_members) frame must reach the SQL tail as
-        # CHECKPOINTED ROWS, not a lazy temp view over the persisted
-        # members frame: Spark 4.1 re-canonicalizes an InMemoryRelation
-        # referenced through a temp view per reference, misses the
-        # cache, and replays the whole CC fixpoint lineage — measured
-        # 412 s for this tail at the 16x sweep vs ~2 s checkpointed
-        # (the dedup_clusters direct-join comment, same trap)
-        sizes = members.groupBy("cluster_id").agg(
-            F.count("*").alias("n_members")
-        )
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(
-            spark, sf_dir, "daw_msize",
-            members.join(sizes, "cluster_id").select("doc_id", "n_members"),
-        )
-    msize = _MINHASH_STAGE_CACHE[key]
-    doc_view = _spread_view(spark, sf_dir, "documents", "daw_docs")
+
+    def build():
+        members = _minhash_members(spark, sf_dir)
+        sizes = members.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
+        return members.join(sizes, "cluster_id").select("doc_id", "n_members")
+
+    # the (doc_id, n_members) frame must reach the SQL tail as
+    # CHECKPOINTED ROWS, not a lazy temp view over the persisted members
+    # frame: Spark 4.1 re-canonicalizes an InMemoryRelation referenced
+    # through a temp view per reference, misses the cache, and replays
+    # the whole CC fixpoint lineage — measured 412 s for this tail at the
+    # 16x sweep vs ~2 s checkpointed (the dedup_clusters direct-join
+    # comment, same trap)
+    msize = stage(spark, sf_dir, "daw_msize", build, "checkpoint")
+    doc_view = spread(spark, sf_dir, "documents")
     return spark.sql("WITH " + _dup_weight_tail(_Spark, doc_view, msize).lstrip())
 
 
@@ -12085,16 +11913,13 @@ def _capture_recapture_tail(wp, mp):
 
 
 def dedup_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = ("winnow_fp", id(spark), sf_dir)
-    if key not in _MINHASH_STAGE_CACHE:
-        dedup_winnowing(spark, sf_dir)
     # checkpointed pair rows, NOT a lazy temp view over the persisted
     # frame — the Spark 4.1 re-canonicalization cache-miss trap (see
     # _minhash_pairs_ckpt; VERDICT r8 item 4)
     view = _minhash_pairs_ckpt(spark, sf_dir)
     return spark.sql(
         _capture_recapture_tail(
-            _winnow_pairs4_sql(_Spark, _MINHASH_STAGE_CACHE[key]),
+            _winnow_pairs4_sql(_Spark, _winnow_fp_stage(spark, sf_dir)),
             f"SELECT doc_a, doc_b FROM {view}",
         )
     )
@@ -12377,9 +12202,9 @@ def dedup_union_cascade_efficiency(spark: SparkSession, sf_dir: str) -> DataFram
     # SQL UNION ALL over checkpointed ExistingRDD scans trips Spark
     # 4.1's UnionBase.rewriteConstraints on a missing attribute) and
     # checkpointed once — the tail references it twice
-    key = ("casc_allp", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        mh = _minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
+
+    def build():
+        mh = _minhash_pairs(spark, sf_dir).frame.select("doc_a", "doc_b")
         dfs = load_tables(spark, sf_dir, ("documents",))
         _repartition_views(spark, dfs)
         sh = (
@@ -12387,30 +12212,25 @@ def dedup_union_cascade_efficiency(spark: SparkSession, sf_dir: str) -> DataFram
             .filter("hamming <= 3")
             .select("doc_a", "doc_b")
         )
-        wkey = ("winnow_fp", id(spark), sf_dir)
-        if wkey not in _MINHASH_STAGE_CACHE:
-            dedup_winnowing(spark, sf_dir)
         wn = spark.sql(
             "SELECT doc_a, doc_b FROM ("
-            + _winnow_pairs4_sql(_Spark, _MINHASH_STAGE_CACHE[wkey])
+            + _winnow_pairs4_sql(_Spark, _winnow_fp_stage(spark, sf_dir))
             + ") w"
         )
-        doc_view = _spread_view(spark, sf_dir, "documents", "casc_docs")
         ex = spark.sql(
             "SELECT doc_a, doc_b FROM ("
-            + _exact_pairs_sql(_Spark, doc_view)
+            + _exact_pairs_sql(_Spark, spread(spark, sf_dir, "documents"))
             + ") e"
         )
-        allp = (
+        return (
             ex.withColumn("st", F.lit(1))
             .unionByName(sh.withColumn("st", F.lit(2)))
             .unionByName(wn.withColumn("st", F.lit(3)))
             .unionByName(mh.withColumn("st", F.lit(4)))
         )
-        _MINHASH_STAGE_CACHE[key] = _checkpoint_view(spark, sf_dir, "casc_allp", allp)
-    return spark.sql(
-        "WITH " + _cascade_tail(_MINHASH_STAGE_CACHE[key]).lstrip()
-    )
+
+    allp = stage(spark, sf_dir, "casc_allp", build, "checkpoint")
+    return spark.sql("WITH " + _cascade_tail(allp).lstrip())
 
 
 def _sql_cascade_duck():
@@ -12621,37 +12441,30 @@ def _uni_stage(spark: SparkSession, sf_dir: str) -> tuple:
     the segmentation by two, the multi-reference class that replays
     lineage through lazy temp views (docs/SCALE.md). Returns
     (wf_view, vocab_view, segs_view)."""
-    key = ("unigram", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        doc_view = _spread_view(spark, sf_dir, "documents", "uni_docs")
-        wf_view = _checkpoint_view(
-            spark, sf_dir, "uni_wf", spark.sql(_uni_wf(_Spark, doc_view))
-        )
-        vocab_view = _checkpoint_view(
-            spark,
-            sf_dir,
-            "uni_vocab",
-            spark.sql(
-                f"WITH cand AS ({_uni_cand(_Spark, wf_view)})\n    {_uni_vocab(_Spark, 'cand')}"
-            ),
-        )
-        # bestlen is checkpointed too: the 16-step walk references it 17
-        # times, and each lazy reference would replay its three joins
-        bl_view = _checkpoint_view(
-            spark,
-            sf_dir,
-            "uni_bestlen",
-            spark.sql(_uni_bestlen(_Spark, wf_view, vocab_view)),
-        )
-        walk = ",\n    ".join(_uni_walk_ctes(_Spark, wf_view, bl_view))
-        segs_view = _checkpoint_view(
-            spark,
-            sf_dir,
-            "uni_segs",
-            spark.sql(f"WITH {walk}\n    {_uni_segments(_Spark, bl_view, 'cuts')}"),
-        )
-        _MINHASH_STAGE_CACHE[key] = (wf_view, vocab_view, segs_view)
-    return _MINHASH_STAGE_CACHE[key]
+    wf_view = stage(
+        spark, sf_dir, "uni_wf",
+        lambda: spark.sql(_uni_wf(_Spark, spread(spark, sf_dir, "documents"))),
+        "checkpoint",
+    )
+    vocab_view = stage(
+        spark, sf_dir, "uni_vocab",
+        lambda: spark.sql(f"WITH cand AS ({_uni_cand(_Spark, wf_view)})\n    {_uni_vocab(_Spark, 'cand')}"),
+        "checkpoint",
+    )
+    # bestlen is checkpointed too: the 16-step walk references it 17
+    # times, and each lazy reference would replay its three joins
+    bl_view = stage(
+        spark, sf_dir, "uni_bestlen",
+        lambda: spark.sql(_uni_bestlen(_Spark, wf_view, vocab_view)),
+        "checkpoint",
+    )
+    walk = ",\n    ".join(_uni_walk_ctes(_Spark, wf_view, bl_view))
+    segs_view = stage(
+        spark, sf_dir, "uni_segs",
+        lambda: spark.sql(f"WITH {walk}\n    {_uni_segments(_Spark, bl_view, 'cuts')}"),
+        "checkpoint",
+    )
+    return wf_view, vocab_view, segs_view
 
 
 def tokenize_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12940,27 +12753,25 @@ def _uni_stage2(spark: SparkSession, sf_dir: str) -> tuple:
     vocabulary, pruned best-match lengths, and the re-walked
     segmentation — each checkpointed once per session+sf_dir (bestlen2
     is referenced 17 times by the walk; segs2 by two tail consumers)."""
-    key = ("unigram2", id(spark), os.path.abspath(sf_dir))
-    if key not in _MINHASH_STAGE_CACHE:
-        wf_view, vocab_view, segs_view = _uni_stage(spark, sf_dir)
-        u_view = _checkpoint_view(
-            spark, sf_dir, "uni_u", spark.sql(_uni_usage(_Spark, wf_view, segs_view))
-        )
-        vocab2_view = _checkpoint_view(
-            spark, sf_dir, "uni_vocab2", spark.sql(_uni_vocab2(_Spark, vocab_view, u_view))
-        )
-        bl2_view = _checkpoint_view(
-            spark, sf_dir, "uni_bestlen2", spark.sql(_uni_bestlen(_Spark, wf_view, vocab2_view))
-        )
-        walk = ",\n    ".join(_uni_walk_ctes(_Spark, wf_view, bl2_view, prefix="r2"))
-        segs2_view = _checkpoint_view(
-            spark,
-            sf_dir,
-            "uni_segs2",
-            spark.sql(f"WITH {walk}\n    {_uni_segments(_Spark, bl2_view, 'r2cuts')}"),
-        )
-        _MINHASH_STAGE_CACHE[key] = (u_view, vocab2_view, segs2_view)
-    return _MINHASH_STAGE_CACHE[key]
+    wf_view, vocab_view, segs_view = _uni_stage(spark, sf_dir)
+    u_view = stage(
+        spark, sf_dir, "uni_u", lambda: spark.sql(_uni_usage(_Spark, wf_view, segs_view)), "checkpoint"
+    )
+    vocab2_view = stage(
+        spark, sf_dir, "uni_vocab2", lambda: spark.sql(_uni_vocab2(_Spark, vocab_view, u_view)), "checkpoint"
+    )
+    bl2_view = stage(
+        spark, sf_dir, "uni_bestlen2",
+        lambda: spark.sql(_uni_bestlen(_Spark, wf_view, vocab2_view)),
+        "checkpoint",
+    )
+    walk = ",\n    ".join(_uni_walk_ctes(_Spark, wf_view, bl2_view, prefix="r2"))
+    segs2_view = stage(
+        spark, sf_dir, "uni_segs2",
+        lambda: spark.sql(f"WITH {walk}\n    {_uni_segments(_Spark, bl2_view, 'r2cuts')}"),
+        "checkpoint",
+    )
+    return u_view, vocab2_view, segs2_view
 
 
 def tokenize_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

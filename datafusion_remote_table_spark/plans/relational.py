@@ -14,7 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..session import load_tables, local_frame
+from ..staging import stage
 from . import register
 
 # Money/quantity columns are doubles in the source; summing doubles is
@@ -48,7 +50,7 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
 # Ranks are exact (buckets are order-consistent ranges); DECIMAL sums are
 # associative so offset + local running sum is bit-identical to the
 # single-partition spelling. DuckDB oracles keep the plain window SQL.
-_RANK_STAGE_CACHE: dict = {}
+_RANK_STAGE_CACHE = staging.REGISTRY  # perfbench clears the stagings through it
 
 
 def _exact_rank_stage(
@@ -71,36 +73,11 @@ def _exact_rank_stage(
     Contract: ``key`` must be non-NULL (engines disagree on NULL
     ordering and the cut comparisons would go NULL) — COALESCE at the
     census, as the callers do."""
-    import os as _os
     from decimal import Decimal
     from functools import reduce
     from operator import add
 
     from pyspark.sql.window import Window
-
-    ck = (prefix, id(spark), _os.path.abspath(sf_dir))
-    if ck in _RANK_STAGE_CACHE:
-        return _RANK_STAGE_CACHE[ck]
-
-    census = census.persist()
-    n = census.count()
-    target = n_buckets * 64
-    frac = min(1.0, target / max(n, 1))
-    thresh = int(frac * 0xFFFFFFFF)
-    hsh = F.conv(F.substring(F.md5(F.col(uid).cast("string")), 1, 8), 16, 10).cast("bigint")
-    sample = [
-        (r[0], r[1])
-        for r in census.select(key, uid).where(hsh <= F.lit(thresh)).collect()
-    ]
-    # stable two-pass sort = (key DESC|ASC, uid ASC)
-    sample.sort(key=lambda t: t[1])
-    sample.sort(key=lambda t: t[0], reverse=desc)
-    cuts: list = []
-    if sample:
-        for j in range(1, n_buckets):
-            c = sample[j * len(sample) // n_buckets]
-            if not cuts or cuts[-1] != c:
-                cuts.append(c)
 
     def _cut_le_row(ck_, cu_):  # cut precedes-or-equals row in sort order
         k, u = F.col(key), F.col(uid)
@@ -108,12 +85,34 @@ def _exact_rank_stage(
             return (k < F.lit(ck_)) | ((k == F.lit(ck_)) & (u >= F.lit(cu_)))
         return (k > F.lit(ck_)) | ((k == F.lit(ck_)) & (u >= F.lit(cu_)))
 
-    bkt = (
-        reduce(add, [F.when(_cut_le_row(ck_, cu_), 1).otherwise(0) for ck_, cu_ in cuts])
-        if cuts
-        else F.lit(0)
-    ).cast("int")
-    bucketed = census.withColumn("_bkt", bkt).persist()
+    def build():
+        cen = stage(spark, sf_dir, f"{prefix}_census", lambda: census, "persist").frame
+        n = cen.count()
+        target = n_buckets * 64
+        frac = min(1.0, target / max(n, 1))
+        thresh = int(frac * 0xFFFFFFFF)
+        hsh = F.conv(F.substring(F.md5(F.col(uid).cast("string")), 1, 8), 16, 10).cast("bigint")
+        sample = [
+            (r[0], r[1])
+            for r in cen.select(key, uid).where(hsh <= F.lit(thresh)).collect()
+        ]
+        # stable two-pass sort = (key DESC|ASC, uid ASC)
+        sample.sort(key=lambda t: t[1])
+        sample.sort(key=lambda t: t[0], reverse=desc)
+        cuts: list = []
+        if sample:
+            for j in range(1, n_buckets):
+                c = sample[j * len(sample) // n_buckets]
+                if not cuts or cuts[-1] != c:
+                    cuts.append(c)
+        bkt = (
+            reduce(add, [F.when(_cut_le_row(ck_, cu_), 1).otherwise(0) for ck_, cu_ in cuts])
+            if cuts
+            else F.lit(0)
+        ).cast("int")
+        return cen.withColumn("_bkt", bkt)
+
+    bucketed = stage(spark, sf_dir, prefix, build, "persist").frame
 
     aggs = [F.count(F.lit(1)).alias("_c")]
     if sum_col is not None:
@@ -132,6 +131,7 @@ def _exact_rank_stage(
         if sum_col is not None:
             off_sum[r["_bkt"]] = run_s
             run_s += r["_s"] if r["_s"] is not None else Decimal(0)
+    n = run_c
     total_sum = run_s if sum_col is not None else None
 
     def _case_chain(mapping, zero, dtype=None):
@@ -153,8 +153,7 @@ def _exact_rank_stage(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         out = out.withColumn("_cum", _case_chain(off_sum, Decimal(0)) + local)
-    _RANK_STAGE_CACHE[ck] = (out, n, total_sum)
-    return _RANK_STAGE_CACHE[ck]
+    return out, n, total_sum
 
 
 # --------------------------------------------------------------------------
@@ -7245,16 +7244,15 @@ _APRIORI_ORACLE = (
 @register("basket_triples_apriori", oracle=_APRIORI_ORACLE)
 def basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
     (li,) = _t(spark, sf_dir, "lineitem")
-    key = ("apriori_stage", id(spark), sf_dir)
-    if key not in _RANK_STAGE_CACHE:
-        suffix = abs(hash(sf_dir)) % 10**8
+
+    def items():
         # RAW (orderkey, partkey) projection, not a distinct+persist: the
         # census dedups inside collect_set and the support side dedups
         # after the keyset filter — the corpus-wide DISTINCT shuffle was
         # a full extra exchange the plan never needed (round-7 16x sweep)
-        items = li.select("l_orderkey", "l_partkey")
-        iview = f"apriori_items_{suffix}"
-        items.createOrReplaceTempView(iview)
+        return stage(spark, sf_dir, "apriori_items", lambda: li.select("l_orderkey", "l_partkey"), "view")
+
+    def freq_pairs():
         # Spark-side pair census: ONE exchange (groupBy orderkey) + pure
         # map-side pair combos over the bounded per-order item arrays
         # (max ~13 items/order measured), instead of the distinct-then-
@@ -7262,26 +7260,8 @@ def basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
         # timing is within noise of the join spelling (A/B measured
         # 3.3/1.7 s vs 3.4/1.8 s at sf0.1 — shuffles are cheap in one
         # JVM), kept because the plan carries one fewer fact-scale
-        # exchange + no sort-merge join, which is what bills at 100TB
-        fp = spark.sql(f"""
-            WITH per_order AS (
-              SELECT l_orderkey, sort_array(collect_set(l_partkey)) AS parts
-              FROM {iview} GROUP BY l_orderkey
-            ),
-            pair_rows AS (
-              SELECT explode(flatten(transform(
-                       sequence(1, size(parts) - 1),
-                       i -> transform(sequence(i + 1, size(parts)),
-                                      j -> struct(element_at(parts, i) AS pa,
-                                                  element_at(parts, j) AS pb))
-                     ))) AS pr
-              FROM per_order WHERE size(parts) >= 2
-            )
-            SELECT pr.pa AS pa, pr.pb AS pb, CAST(COUNT(*) AS BIGINT) AS n_ab
-            FROM pair_rows GROUP BY pr.pa, pr.pb
-            HAVING COUNT(*) >= ({_APRIORI_THR.format(items=iview, DIV="DIV")})
-        """).localCheckpoint(eager=True)
-        # localCheckpoint, not persist+count (round-10): the candidate
+        # exchange + no sort-merge join, which is what bills at 100TB.
+        # Checkpointed, not persist+count (round-10): the candidate
         # generate/prune SQL references this frame 3x through the temp
         # view, and Spark 4.1's best-effort InMemoryRelation matching
         # MISSED here (the HAVING's scalar threshold subquery survives
@@ -7289,29 +7269,54 @@ def basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
         # re-ran the census per reference. Measured min-of-2 interleaved
         # at sf0.1: census 4.2 -> 2.0 s (no separate count action),
         # prune 3.2 -> 0.24 s.
-        fview = f"apriori_pairs_{suffix}"
-        fp.createOrReplaceTempView(fview)
+        return stage(
+            spark, sf_dir, "apriori_pairs",
+            lambda: spark.sql(f"""
+                WITH per_order AS (
+                  SELECT l_orderkey, sort_array(collect_set(l_partkey)) AS parts
+                  FROM {items()} GROUP BY l_orderkey
+                ),
+                pair_rows AS (
+                  SELECT explode(flatten(transform(
+                           sequence(1, size(parts) - 1),
+                           i -> transform(sequence(i + 1, size(parts)),
+                                          j -> struct(element_at(parts, i) AS pa,
+                                                      element_at(parts, j) AS pb))
+                         ))) AS pr
+                  FROM per_order WHERE size(parts) >= 2
+                )
+                SELECT pr.pa AS pa, pr.pb AS pb, CAST(COUNT(*) AS BIGINT) AS n_ab
+                FROM pair_rows GROUP BY pr.pa, pr.pb
+                HAVING COUNT(*) >= ({_APRIORI_THR.format(items=items(), DIV="DIV")})
+            """),
+            "checkpoint",
+        )
+
+    def pruned():
         # checkpoint the generated+pruned candidates: the report reads
         # them twice and the generate/prune joins cost ~4.5 s per lazy
         # re-evaluation at sf0.1 (measured round 7) for a candidate-
         # bounded (tiny) frame
-        pruned = spark.sql(
-            "WITH " + _APRIORI_CAND.format(fp=fview, MAT="")
-            + "\n    SELECT * FROM pruned"
-        ).localCheckpoint(eager=True)
-        pview = f"apriori_pruned_{suffix}"
-        pruned.createOrReplaceTempView(pview)
-        # candidate-keyset-filtered fact rows, checkpointed: the support
-        # three-way join reads them three times
-        items_f = spark.sql(
-            "WITH " + _APRIORI_FILTER.format(items=iview, pruned=pview).lstrip()
+        return stage(
+            spark, sf_dir, "apriori_pruned",
+            lambda: spark.sql(
+                "WITH " + _APRIORI_CAND.format(fp=freq_pairs(), MAT="")
+                + "\n    SELECT * FROM pruned"
+            ),
+            "checkpoint",
+        )
+
+    # candidate-keyset-filtered fact rows, checkpointed: the support
+    # three-way join reads them three times
+    ifview = stage(
+        spark, sf_dir, "apriori_itemsf",
+        lambda: spark.sql(
+            "WITH " + _APRIORI_FILTER.format(items=items(), pruned=pruned()).lstrip()
             + "\n    SELECT * FROM items_f"
-        ).localCheckpoint(eager=True)
-        ifview = f"apriori_itemsf_{suffix}"
-        items_f.createOrReplaceTempView(ifview)
-        _RANK_STAGE_CACHE[key] = (iview, fview, pview, ifview)
-    _iview, _fview, pview, ifview = _RANK_STAGE_CACHE[key]
-    return spark.sql("WITH " + _APRIORI_REPORT.format(itemsf=ifview, pruned=pview))
+        ),
+        "checkpoint",
+    )
+    return spark.sql("WITH " + _APRIORI_REPORT.format(itemsf=ifview, pruned=pruned()))
 
 
 # --------------------------------------------------------------------------
@@ -7964,14 +7969,13 @@ def _dp_plan_sql(stats_src: str) -> str:
 )
 def join_order_dp_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t(spark, sf_dir, "lineitem", "orders", "customer", "nation")
-    key = ("dp_stats", id(spark), sf_dir)
-    if key not in _RANK_STAGE_CACHE:
+
+    def build():
         stats = spark.sql("SELECT * FROM (" + _DP_STATS_SQL + ")").persist()
         stats.count()  # the 4-table census runs once; 10 subset rows re-read it
-        view = f"dp_stats_{abs(hash(sf_dir)) % 10**8}"
-        stats.createOrReplaceTempView(view)
-        _RANK_STAGE_CACHE[key] = view
-    return spark.sql(_dp_plan_sql(_RANK_STAGE_CACHE[key]))
+        return stats
+
+    return spark.sql(_dp_plan_sql(stage(spark, sf_dir, "dp_stats", build, "persist")))
 
 
 # --------------------------------------------------------------------------

@@ -34,6 +34,10 @@ def _register_datasource(spark: SparkSession) -> None:
     from ..session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)  # driver-supplied sessions lack our configs
+    # The write path resolves the data source through the calling JVM
+    # thread's ACTIVE session. A pool thread has none, so an insert from
+    # it failed with DATA_SOURCE_NOT_FOUND even after registration.
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
     key = "_dfrt_remote_table_registered"
     if not getattr(spark, key, False):
         spark.dataSource.register(RemoteTableDataSource)

@@ -1355,30 +1355,32 @@ def stream_t_closeness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the keyed agg with map-side partials."""
     from ..plans.llm_data import _Spark, _tclose_post_cells, _tclose_tail
     from ..session import load_tables
+    from ..staging import stage
 
-    stream = _orders_stream(spark, sf_dir)
-    customer = F.broadcast(load_tables(spark, sf_dir, ("customer",))["customer"])
-    cells = (
-        stream.join(customer, stream.o_custkey == customer.c_custkey)
-        .select(
-            F.col("c_nationkey").alias("nk"),
-            F.col("c_mktsegment").alias("seg"),
-            F.year("o_orderdate").cast("bigint").alias("yr"),
-            F.col("o_orderpriority").alias("sens"),
+    def build():
+        stream = _orders_stream(spark, sf_dir)
+        customer = F.broadcast(load_tables(spark, sf_dir, ("customer",))["customer"])
+        cells = (
+            stream.join(customer, stream.o_custkey == customer.c_custkey)
+            .select(
+                F.col("c_nationkey").alias("nk"),
+                F.col("c_mktsegment").alias("seg"),
+                F.year("o_orderdate").cast("bigint").alias("yr"),
+                F.col("o_orderpriority").alias("sens"),
+            )
+            .groupBy("nk", "seg", "yr", "sens")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
-        .groupBy("nk", "seg", "yr", "sens")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    bounded = _run_bounded(cells, "stream_t_closeness_monitor")
-    view = "stream_tclose_cells"
-    # localCheckpoint before registering: the EMD layer references the
+        return _run_bounded(cells, "stream_t_closeness_monitor")
+
+    # checkpointed, not a plain view: the EMD layer references the
     # census THREE times (sizes, global distribution, dense-grid join)
     # and a MemorySink-backed view exposes the SAME attribute ids to
     # every branch — Spark's self-join dedup fails analysis on the
     # third reference (cl.nk unresolvable). A checkpointed LogicalRDD
     # view is the repo's standard multi-reference staging and the
     # frame is class-bounded (875 rows at sf0.01).
-    bounded.localCheckpoint(eager=True).createOrReplaceTempView(view)
+    view = stage(spark, sf_dir, "stream_tclose_cells", build, "checkpoint")
     return spark.sql(
         f"WITH {_tclose_post_cells(_Spark, view)},\n    "
         + _tclose_tail(_Spark).lstrip()

@@ -204,6 +204,27 @@ def test_insert_roundtrip(spark, sqlite_db):
     assert t.count() == 3
 
 
+def test_read_and_insert_from_pool_threads(spark, tmp_path):
+    # a fresh worker thread has no active JVM session, and the write
+    # path resolves the source through it. spark.range, unlike
+    # createDataFrame, does not set one as a side effect.
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "threads.db")
+    conn = sqlite3.connect(path)
+    conn.execute("CREATE TABLE t (id INTEGER, name TEXT)")
+    conn.commit()
+    conn.close()
+    t = RemoteTable(SqliteConnectionOptions(path=path), ["t"])
+
+    def work():
+        t.insert(spark.range(5).selectExpr("id", "concat('n', CAST(id AS STRING)) AS name"))
+        return sorted(tuple(r) for r in t.read(spark).collect())
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        assert pool.submit(work).result() == [(i, f"n{i}") for i in range(5)]
+
+
 # -- transform (transform.rs parity) ----------------------------------------
 def test_transform_batches(spark, sqlite_db):
     tr = RemoteTransform(

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_remote_table_spark import plans
+from datafusion_remote_table_spark import plans, staging
 
 plans.load_all()
 
@@ -122,7 +122,7 @@ def test_minhash_staging_survives_view_replacement(spark, sf_dir):
     didn't — see docs/SCALE.md)."""
     from datafusion_remote_table_spark.plans.llm_data import _minhash_pairs
 
-    _minhash_pairs(spark, sf_dir).count()  # build + persist the staging
+    _minhash_pairs(spark, sf_dir).frame.count()  # build + persist the staging
     # simulate an unrelated query re-registering the shared view
     plans.QUERIES["text_quality_score"](spark, sf_dir).count()
     # probe through dedup_rate_by_source: it reads the pairs staging via a
@@ -468,15 +468,16 @@ def test_kcenter_updates_are_map_side(spark, sf_dir):
     # a pure map pass over the checkpointed state: no Exchange at all
     from datafusion_remote_table_spark.plans import llm_data as L
 
-    src = L._spread_view(spark, sf_dir, "embeddings", "kcshape_emb")
+    src = staging.spread(spark, sf_dir, "embeddings")
     cid = spark.sql(L._kc_seed_sql(L._Spark, src)).collect()[0][0]
     emb = spark.sql(f"SELECT embedding FROM {src} WHERE vec_id = {cid}").collect()[0][0]
     lit = "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in emb) + ")"
-    d = L._checkpoint_view(
+    d = staging.stage(
         spark, sf_dir, "kcshape_d",
-        spark.sql(
+        lambda: spark.sql(
             f"SELECT vec_id, embedding, ROUND({L._Spark.sqdist('embedding', lit)}, 6) AS dmin FROM {src} e"
         ),
+        "checkpoint",
     )
     upd = spark.sql(
         f"SELECT vec_id, LEAST(dmin, ROUND({L._Spark.sqdist('embedding', lit)}, 6)) AS dmin FROM {d} d"
@@ -877,9 +878,7 @@ def test_pps_cumsum_is_bucket_partitioned(spark, sf_dir):
     # the cumulative weight must ride the RangePartitioner two-pass:
     # every Window in the plan carries the _bkt partition (no
     # unpartitioned corpus window — the round-5 rule)
-    from datafusion_remote_table_spark.plans import relational as R
-
-    R._RANK_STAGE_CACHE.clear()
+    staging.release(spark, sf_dir, "pps_frame", "pps_stage", "pps_stage_census")
     plan = _plan(plans.QUERIES["sample_pps_systematic"](spark, sf_dir))
     for line in plan.splitlines():
         if "Window" in line and "windowspecdefinition" in line:
@@ -898,9 +897,7 @@ def test_burrows_delta_rides_staged_census(spark, sf_dir):
 def test_dp_plan_reads_persisted_stats_only(spark, sf_dir):
     # all ten subset rows re-read the one persisted stats row — the
     # 4-table distinct census must not re-run per UNION branch
-    from datafusion_remote_table_spark.plans import relational as R
-
-    R._RANK_STAGE_CACHE.clear()
+    staging.release(spark, sf_dir, "dp_stats")
     plan = _plan(plans.QUERIES["join_order_dp_plan"](spark, sf_dir))
     # NOTE: InMemoryRelation nodes PRINT their cached child plan, so
     # FileScan strings legitimately appear inside the cache description
@@ -928,16 +925,13 @@ def test_wasserstein_grid_is_census_sized(spark, sf_dir):
 def test_prefix_filter_windows_partition_by_doc(spark, sf_dir):
     # the df-rank window partitions BY DOC (never global); candidates
     # come from hash joins on the checkpointed postings — no cartesian
-    from datafusion_remote_table_spark.plans import llm_data as L
-
-    key = ("pf_prefix", id(spark), __import__("os").path.abspath(sf_dir))
-    L._MINHASH_STAGE_CACHE.pop(key, None)
+    staging.release(spark, sf_dir, "pf_prefix")
     df = plans.QUERIES["dedup_prefix_filter_join"](spark, sf_dir)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "Scan ExistingRDD" in plan, "tail not reading the checkpointed postings"
     # the staging plan (built during the call) carries the partitioned window
-    stage = spark.table(L._MINHASH_STAGE_CACHE[key])
+    stage = spark.table(staging.live(spark, sf_dir)["pf_prefix"])
     assert stage.count() > 0
 
 
@@ -956,11 +950,10 @@ def test_mmr_pool_is_takeordered(spark, sf_dir):
     # pass — never a global sort — and the final frame is constant-size
     from datafusion_remote_table_spark.plans import llm_data as L
 
-    key = ("mmr_pool", id(spark), __import__("os").path.abspath(sf_dir))
-    L._MINHASH_STAGE_CACHE.pop(key, None)
+    staging.release(spark, sf_dir, "mmr_sims", "mmr_pool")
     df = plans.QUERIES["sample_mmr_diverse_topk"](spark, sf_dir)
     assert df.count() <= L._MMR_K
-    pool, _sims = L._MINHASH_STAGE_CACHE[key]
+    pool = staging.live(spark, sf_dir)["mmr_pool"]
     assert spark.table(pool).count() <= L._MMR_POOL
 
 
@@ -979,8 +972,7 @@ def test_aspect_bucket_plan_is_arrow_mapinpandas(spark, sf_dir):
 
     stage_plan = _plan(L._aspect_dims_frame(spark, sf_dir))
     assert stage_plan.count("MapInPandas") >= 2, "encode/parse not Arrow batches"
-    key = ("aspect_dims", id(spark), __import__("os").path.abspath(sf_dir))
-    L._MINHASH_STAGE_CACHE.pop(key, None)
+    staging.release(spark, sf_dir, "aspect_dims")
     plan = _plan(plans.QUERIES["multimodal_aspect_bucket_plan"](spark, sf_dir))
     assert "Scan ExistingRDD" in plan, "tail not reading the checkpointed dims"
     assert "MapInPandas" not in plan, "encode/parse re-runs inside the tail"
@@ -1029,10 +1021,7 @@ def test_dup_weights_ride_members_staging(spark, sf_dir):
 def test_cascade_reads_checkpointed_union(spark, sf_dir):
     # the 4-generator union is checkpointed once; the tail (4 references)
     # must read rows, not re-run any signature chain
-    from datafusion_remote_table_spark.plans import llm_data as L
-
-    key = ("casc_allp", id(spark), __import__("os").path.abspath(sf_dir))
-    L._MINHASH_STAGE_CACHE.pop(key, None)
+    staging.release(spark, sf_dir, "casc_allp")
     plan = _plan(plans.QUERIES["dedup_union_cascade_efficiency"](spark, sf_dir))
     assert "Scan ExistingRDD" in plan, "tail not reading the checkpointed union"
     # (the plan's one CartesianProduct is the st<=st cumulative self-join
@@ -1050,10 +1039,7 @@ def test_semdedup_two_phase_reads_checkpointed_group(spark, sf_dir):
     # the (vec, cluster, bucket) group frame is referenced four times by
     # the two-phase tail — it must be checkpointed rows, and the plan
     # must carry no global window and no cartesian
-    from datafusion_remote_table_spark.plans import llm_data as L
-
-    key = ("semdedup_grp", id(spark), __import__("os").path.abspath(sf_dir))
-    L._MINHASH_STAGE_CACHE.pop(key, None)
+    staging.release(spark, sf_dir, "sd_grp")
     plan = _plan(plans.QUERIES["semdedup_embedding"](spark, sf_dir))
     assert "Scan ExistingRDD" in plan, "tail not reading the checkpointed group"
     assert "CartesianProduct" not in plan

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import argparse
 import contextlib
-import gc
 import io
 import json
 import os
@@ -24,20 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from datafusion_remote_table_spark import plans
+from datafusion_remote_table_spark import plans, staging
 from datafusion_remote_table_spark.session import get_spark
-
-
-def _clear_stagings(spark) -> None:
-    from datafusion_remote_table_spark.operators import dedup as op_dedup
-    from datafusion_remote_table_spark.plans import llm_data, relational
-
-    llm_data._MINHASH_STAGE_CACHE.clear()
-    relational._RANK_STAGE_CACHE.clear()
-    op_dedup.release_persisted()
-    spark.catalog.clearCache()
-    gc.collect()
-    spark._jvm.System.gc()
 
 
 def main() -> None:
@@ -62,13 +49,13 @@ def main() -> None:
                 plans.QUERIES[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
             except Exception:
                 pass
-        _clear_stagings(spark)
+        staging.reset(spark)
 
     out = {}
     for name in args.names:
         runs = []
         for _ in range(args.runs):
-            _clear_stagings(spark)
+            staging.reset(spark)
             spark.sparkContext.setJobDescription(f"prof:{name}")
             t0 = time.perf_counter()
             plans.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from datafusion_remote_table_spark import plans
+from datafusion_remote_table_spark import plans, staging
 from datafusion_remote_table_spark.session import get_spark
 
 
@@ -77,45 +77,7 @@ def main() -> None:
 
     threading.Thread(target=watchdog, daemon=True).start()
 
-    def release(wanted_names: list[str]) -> None:
-        # mirror of bench._release_stagings (nested in bench.main)
-        from datafusion_remote_table_spark.plans import llm_data, relational
-
-        wanted = set(wanted_names)
-
-        def _free(val) -> None:
-            if isinstance(val, tuple):
-                for part in val:
-                    _free(part)
-            elif isinstance(val, str):
-                try:
-                    spark.catalog.uncacheTable(val)
-                except Exception:
-                    pass
-                try:
-                    spark.catalog.dropTempView(val)
-                except Exception:
-                    pass
-            elif hasattr(val, "unpersist"):
-                try:
-                    val.unpersist(False)
-                except Exception:
-                    pass
-
-        def _keyname(key) -> str:
-            if isinstance(key, tuple):
-                return key[0] if isinstance(key[0], str) else "minhash_shsigbands"
-            return str(key)
-
-        removed = False
-        for cache in (llm_data._MINHASH_STAGE_CACHE, relational._RANK_STAGE_CACHE):
-            for key in [k for k in cache if _keyname(k) in wanted]:
-                _free(cache.pop(key))
-                removed = True
-        if removed:
-            gc.collect()
-            spark._jvm.System.gc()
-
+    release_after = bench.load_release_points()
     timings = {}
     for name in names:
         state.update(query=name, t0=time.perf_counter(), dumped=False)
@@ -124,10 +86,7 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
         state["query"] = None
         gc.collect()
-        if name in bench.RELEASE_AFTER and os.environ.get(
-            "SPARK_GRAFT_RELEASE_STAGINGS", "1"
-        ) == "1":
-            release(bench.RELEASE_AFTER[name])
+        staging.release(spark, sf_dir, *release_after.get(name, ()))
         print(f"{name} {timings[name]}", flush=True)
     print(json.dumps(timings))
 
