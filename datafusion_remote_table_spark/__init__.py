@@ -5,6 +5,10 @@ surface and LLM-training-data-pipeline operators, all designed for
 100TB-scale Spark execution.
 """
 
-from .session import get_spark, load_tables  # noqa: F401
+from . import zipcache
+
+zipcache.install_in_worker()
+
+from .session import get_spark, load_tables  # noqa: E402,F401
 
 __version__ = "0.1.0"

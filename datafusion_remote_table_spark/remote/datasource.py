@@ -17,6 +17,7 @@ Usage:
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Iterable, Sequence
 
 from pyspark.sql.datasource import (
@@ -100,8 +101,7 @@ class RemoteTableReader(DataSourceReader):
         spec = self.spec
         if spec.columns is None:
             # prune the remote projection to the schema Spark asked for
-            spec = RemoteScanSpec.from_json(spec.to_json())
-            spec.columns = [f.name for f in self.schema.fields]
+            spec = dataclasses.replace(spec, columns=[f.name for f in self.schema.fields])
         yield from spec.fetch_arrow(tuple(partition.predicates), arrow_schema)
 
 
